@@ -1,38 +1,60 @@
 """Convergence plumbing for iterative DataFrame loops.
 
 Every fixpoint loop in this engine (min-label propagation, alternating
-star CC, k-core peeling, frontier BFS) follows the same round shape:
-materialize the round's state with an eager ``localCheckpoint`` (lineage
-truncation — CLAUDE.md iterative rule), then ask a scalar question about
-that state ("how many rows changed?", "is the edge set identical to last
-round's?") to decide whether to stop.  Asking with a separate ``count()``
-(or worse, ``exceptAll``) costs one extra Spark JOB per round — and at
-the toy SFs the driver benches, these loops are bounded by the ~0.15-0.3
-s/job scheduling floor, not by data, so the convergence-check job is a
-measurable fraction of every iterative query's wall (guide §1.2 step 1:
-don't compute things you throw away; VERDICT r13 next-round item 3).
+star CC, k-core peeling, frontier BFS, Lloyd rounds, BPE merges) follows
+the same shape: run the rounds at a narrow shuffle width (the loop
+relations are tiny next to the corpus, so per-round width is pure
+overhead), materialize each round's state with an eager
+``localCheckpoint`` (lineage truncation — CLAUDE.md iterative rule), then
+ask a scalar question about that state ("how many rows changed?", "is the
+edge set identical to last round's?") to decide whether to stop.
 
-``checkpoint_with_metrics`` folds the question INTO the materialization:
-``DataFrame.observe`` attaches aggregate metrics that Spark computes on
-the rows flowing through the checkpoint's own action, so a round costs
-exactly ONE job and the convergence scalars ride along for free.  The
-metrics are exact aggregates over the full checkpointed row set (the
-CollectMetrics node sits above the full plan), not estimates — the loop
-semantics and round counts are bit-identical to the count()-based form.
+``loop_width`` is the one place that scopes the loop width: it sets
+``spark.sql.shuffle.partitions`` for the loop body and restores the
+previous value on exit, including when the body raises.
 
-Plan-capture compatibility: ``scripts/capture_plan_r*.py`` monkey-patch
+``checkpoint_with_metrics`` folds the convergence question INTO the
+materialization. Asking with a separate ``count()`` (or worse,
+``exceptAll``) costs one extra Spark JOB per round — and at the toy SFs
+the driver benches, these loops are bounded by the ~0.15-0.3 s/job
+scheduling floor, not by data. ``DataFrame.observe`` attaches aggregate
+metrics that Spark computes on the rows flowing through the checkpoint's
+own action, so a round costs exactly ONE job and the convergence scalars
+ride along for free. The metrics are exact aggregates over the full
+checkpointed row set (the CollectMetrics node sits above the full plan),
+not estimates — the loop semantics and round counts are bit-identical to
+the count()-based form.
+
+Plan-capture compatibility: ``scripts/capture_plan.py`` monkey-patches
 ``localCheckpoint`` to identity so iterative queries expose their whole
-per-round lineage in one plan.  Under that patch no action fires and
-``Observation.get`` would block forever — so the helper detects the
-patch (a REAL checkpoint's analyzed plan is a ``LogicalRDD``; the
-identity-patched one still shows ``CollectMetrics``) and falls back to
-one explicit count-shaped action, restoring the old per-round cost only
-in capture mode.
+per-round lineage in one plan. Under that patch no action fires and
+``Observation.get`` would block forever — so the helper checks whether
+``localCheckpoint`` handed back the very frame it was called on (a real
+checkpoint always returns a new frame) and only then fires one explicit
+count-shaped action, restoring the old per-round cost in capture mode
+only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+
+_WIDTH_CONF = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def loop_width(spark: SparkSession, n: int) -> Iterator[int]:
+    """Run the ``with`` body at shuffle width ``n`` and restore the
+    previous ``spark.sql.shuffle.partitions`` afterwards. Yields ``n``."""
+    prev = spark.conf.get(_WIDTH_CONF)
+    spark.conf.set(_WIDTH_CONF, str(n))
+    try:
+        yield n
+    finally:
+        spark.conf.set(_WIDTH_CONF, prev)
 
 
 def checkpoint_with_metrics(
@@ -47,13 +69,8 @@ def checkpoint_with_metrics(
     ``DataFrame.observe``.
     """
     obs = Observation()
-    out = df.observe(obs, *metrics).localCheckpoint()
-    # A real eager localCheckpoint already ran the materialization action
-    # (analyzed plan = LogicalRDD over the checkpointed partitions).  If a
-    # plan-capture script patched localCheckpoint to identity, the plan
-    # still carries the un-executed CollectMetrics node — fire one
-    # explicit action so Observation.get cannot block forever.
-    analyzed = out._jdf.queryExecution().analyzed()  # type: ignore[attr-defined]
-    if analyzed.getClass().getSimpleName() != "LogicalRDD":
-        out.count()  # capture-mode fallback only (identity checkpoint)
+    observed = df.observe(obs, *metrics)
+    out = observed.localCheckpoint()
+    if out is observed:
+        out.count()  # identity-patched checkpoint: no action has run
     return out, obs.get

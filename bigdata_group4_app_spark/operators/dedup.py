@@ -25,11 +25,12 @@ engines; no FP tolerance needed anywhere except cosine (rounded 4dp).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.iterative import checkpoint_with_metrics
+from ..functions.iterative import checkpoint_with_metrics, loop_width
 from ..functions.hashing import (
     duck_md5_int,
     duck_md5_int60,
@@ -134,27 +135,14 @@ shingles AS (
 
 _DUCK_SHINGLES = duck_shingles_ctes().strip()
 
-# Cluster-correct default (VERDICT r11 item 2): the shingle relation
-# feeds 3 consumers in every MinHash pipeline (signature agg + both
-# verify sides; the set-size fold merged into the signature agg this
-# round) and re-computing it per consumer re-reads the raw text scan —
-# fine on local[*] where the parquet is page-cached and branches run
-# fully parallel, WRONG on a real cluster where each recompute is
-# remote IO over the corpus's largest relation. The code default is
-# therefore persist (MEMORY_AND_DISK); the local[*] lazy mode is an
-# explicit opt-out, not the silent default. Round-12 isolated x3 at
-# sf0.1 (SCALE.md round 12 table): persist min 1.52 s (canary 0.60)
-# vs lazy min 1.65-1.82 s across two sessions — with one fewer
-# consumer the r11 lazy-wins A/B no longer holds even locally, so the
-# cluster-correct default costs nothing.
-import os as _os
-
-SHINGLE_PERSIST = _os.environ.get("SPARK_GRAFT_SHINGLE_PERSIST", "1") != "0"
-
-
-def _maybe_persist_shingles(sh: DataFrame) -> DataFrame:
-    """persist(MEMORY_AND_DISK) the shared shingle relation unless
-    SPARK_GRAFT_SHINGLE_PERSIST=0 (the local[*]-only opt-out).
+# The shingle relation feeds 3 consumers in every MinHash pipeline
+# (signature agg + both verify sides) and re-computing it per consumer
+# re-reads the raw text scan — on a real cluster that is remote IO over
+# the corpus's largest relation, so it is persisted once. Round-12
+# isolated x3 at sf0.1 (SCALE.md round 12 table): persist min 1.52 s vs
+# lazy min 1.65-1.82 s, so persisting costs nothing on local[*] either.
+def _persist_shingles(sh: DataFrame) -> DataFrame:
+    """persist(MEMORY_AND_DISK) the shared shingle relation.
     Construction-lazy (persist, never localCheckpoint — round 10), so
     plan-only consumers still run zero jobs.
 
@@ -166,11 +154,7 @@ def _maybe_persist_shingles(sh: DataFrame) -> DataFrame:
     per-query ``catalog.clearCache()``; a long-lived session
     constructing many MinHash-family queries re-USES the entries (same
     canonical plan), it doesn't duplicate them."""
-    if SHINGLE_PERSIST:
-        from pyspark import StorageLevel
-
-        return sh.persist(StorageLevel.MEMORY_AND_DISK)
-    return sh
+    return sh.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _jaccard_verify(
@@ -358,16 +342,14 @@ def corpus_clean_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH mining. The shingle relation feeds three consumers
     (signature agg — which also folds the per-doc set sizes since r12 —
-    plus both verify sides); the code default is the CLUSTER-correct
-    one — persist it once (MEMORY_AND_DISK via
-    ``_maybe_persist_shingles``) instead of letting Spark plan three
+    plus both verify sides); it is persisted once (MEMORY_AND_DISK via
+    ``_persist_shingles``) instead of letting Spark plan three
     independent scan→explode chains over the raw-text scan, which at
-    100 TB is remote IO over the corpus's largest relation. local[*]
-    can opt out with SPARK_GRAFT_SHINGLE_PERSIST=0 (the r11 A/B that
-    favored lazy there; the r12 isolated re-measure found persist
-    faster locally too — numbers in SCALE.md round 12)."""
+    100 TB is remote IO over the corpus's largest relation (the r12
+    isolated re-measure found persist faster on local[*] too — numbers
+    in SCALE.md round 12)."""
     return _minhash_pairs_from(
-        _maybe_persist_shingles(_shingles(spark, sf_dir))
+        _persist_shingles(_shingles(spark, sf_dir))
     ).orderBy("doc_id_1", "doc_id_2")
 
 
@@ -393,7 +375,7 @@ def minhash_lsh_pairs_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     REJECTED at verify time, so at the operating threshold the output
     difference is only the banding's recall, which the tuning audit
     prices."""
-    sh = _maybe_persist_shingles(_shingles(spark, sf_dir))
+    sh = _persist_shingles(_shingles(spark, sf_dir))
     sig = _minhash_sig(sh)
     cands = _minhash_cands_br(sig, SCALED_BANDS, SCALED_ROWS)
     return (
@@ -1640,7 +1622,7 @@ def _near_dup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint, not cache — caching pins the pre-AQE plan and was
     # measured ~1s slower; and mine WITHOUT minhash_lsh_pairs' presentation
     # orderBy (a global sort the propagation immediately destroys)
-    sh = _maybe_persist_shingles(_shingles(spark, sf_dir))
+    sh = _persist_shingles(_shingles(spark, sf_dir))
     pairs = (
         _minhash_pairs_from(sh)
         .select("doc_id_1", "doc_id_2")
@@ -1661,13 +1643,8 @@ def _near_dup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tiny relation at any corpus size — so per-round shuffle width is pure
     # overhead: scope the loop to few partitions, restore after (3× faster
     # at sf0.1: 12s → 4s).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        labels = _propagate_min_labels(edges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return labels
+    with loop_width(spark, 4):
+        return _propagate_min_labels(edges)
 
 
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2191,7 +2168,7 @@ def minhash_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     why ``minhash_lsh_pairs_scaled`` exists). Window over K+1
     aggregated rows — benign under the global-window audit.
     """
-    sh = _maybe_persist_shingles(_shingles(spark, sf_dir))
+    sh = _persist_shingles(_shingles(spark, sf_dir))
     sig, cands = _minhash_sig_cands(sh)
     matches = sum(
         (F.col(f"s1.mh{s}") == F.col(f"s2.mh{s}")).cast("int")
@@ -2611,7 +2588,7 @@ def incremental_minhash_lsh(
         )
         probe_fits = n_batch_docs * MINHASH_K <= broadcast_max_bands
         hint = F.broadcast if probe_fits else (lambda df: df)
-    sh = _maybe_persist_shingles(_shingles(spark, sf_dir))
+    sh = _persist_shingles(_shingles(spark, sf_dir))
     sig, _ = _minhash_sig_cands(sh)
     long = _minhash_long(sig)
     new_l = long.filter(F.col("doc_id") % INCREMENT_MOD >= 8)
@@ -2869,7 +2846,7 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     r=1-discoverable true dups (pairs no single hash catches are
     invisible to every config — documented estimator bias, shared by
     any banding of the same signature)."""
-    sh = _maybe_persist_shingles(_shingles(spark, sf_dir))
+    sh = _persist_shingles(_shingles(spark, sf_dir))
     sig, cands = _minhash_sig_cands(sh)
     # candidate-bounded relation with THREE consumers below (verify,
     # id semi-join, flag join) — persist() so the band self-join isn't

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.iterative import checkpoint_with_metrics
+from ..functions.iterative import checkpoint_with_metrics, loop_width
 from ..sources.registry import load_table
 
 PR_DAMPING = 0.85
@@ -722,9 +722,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (small, and it only SHRINKS): per-round shuffle width is floor, not
     # data — scope it narrow, restore after (CLAUDE.md iterative-tail
     # rule; the basket mining above already materialized at full width)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with loop_width(spark, 4):
         for _ in range(KCORE_ROUNDS):
             if n_cur == 0:
                 break
@@ -750,8 +748,6 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_cur = n_nxt
             if stable:
                 break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         cur.groupBy(F.col("a").alias("part"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -873,9 +869,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.col("label"))
     # the loop relations are edge-sized at most — scope the per-round
     # shuffle width down (CLAUDE.md iterative rule), restore after
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_LPA_WIDTH))
-    try:
+    with loop_width(spark, _LPA_WIDTH):
         for _ in range(LPA_ROUNDS):
             labels = (
                 sym.join(
@@ -892,8 +886,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
                 .select("v", "label")
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -999,9 +991,7 @@ def bfs_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier = reached
     # frontier/reached are node-sized at most — scope the per-round
     # shuffle width down (CLAUDE.md iterative rule), restore after
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with loop_width(spark, 8):
         for r in range(1, BFS_ROUNDS + 1):
             # frontier size observed during the checkpoint job (round
             # 14: was checkpoint + limit(1).count + a re-checkpoint of
@@ -1018,11 +1008,11 @@ def bfs_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             # union of ≤ BFS_ROUNDS checkpointed layer frames: plan depth
             # is round-bounded, and scanning r tiny checkpointed layers
-            # beats re-materializing the cumulative set every round
+            # beats re-materializing the cumulative set every round. The
+            # cost is quadratic: round r's anti-join scans all r layer
+            # frames, so layer scans total O(BFS_ROUNDS²) over the loop
             reached = reached.union(new)
             frontier = new
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     nodes = sym.select(F.col("a").alias("v")).distinct()
     unreached = nodes.join(reached.select("v"), "v", "left_anti").select(
         "v", F.lit(-1).cast("int").alias("d")

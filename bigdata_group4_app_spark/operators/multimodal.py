@@ -30,6 +30,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.iterative import loop_width
 from ..sources.registry import load_table
 
 MIMES = ("image/png", "audio/wav", "video/mp4")
@@ -601,6 +602,12 @@ QUERIES["image_phash_pairs"] = image_phash_pairs
 # multimodal dedup union: text MinHash ∪ image pHash evidence clusters
 # ---------------------------------------------------------------------------
 
+# the evidence-edge checkpoint's partition count and the propagation
+# loop's shuffle width: evidenced docs are a tiny relation at any corpus
+# size, so per-round width is pure overhead (the _near_dup_cluster_labels
+# lever)
+_MM_LOOP_WIDTH = 4
+
 
 def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One dedup decision across modalities: text near-dup evidence
@@ -637,11 +644,11 @@ def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _minhash_sig_cands,
         _jaccard_verify,
         _propagate_min_labels,
-        _maybe_persist_shingles,
+        _persist_shingles,
         _shingles,
     )
 
-    sh = _maybe_persist_shingles(_shingles(spark, sf_dir))
+    sh = _persist_shingles(_shingles(spark, sf_dir))
     sig, cands = _minhash_sig_cands(sh)
     tpairs = (
         _jaccard_verify(cands, sh, sizes=sig.select("doc_id", "n"))
@@ -655,23 +662,21 @@ def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # narrow the checkpointed partitioning: the union inherits ~2×32
     # mostly-empty partitions from its two mining subtrees, and every
-    # propagation round would re-scan all of them (width matches the
-    # scoped loop conf below; at production scale pick ∝ edge volume)
-    edges = tpairs.unionByName(ipairs).repartition(4).localCheckpoint()
+    # propagation round would re-scan all of them (at production scale
+    # pick the width ∝ edge volume)
+    edges = (
+        tpairs.unionByName(ipairs)
+        .repartition(_MM_LOOP_WIDTH)
+        .localCheckpoint()
+    )
     sym = edges.select("doc_id_1", "doc_id_2").unionByName(
         edges.select(
             F.col("doc_id_2").alias("doc_id_1"),
             F.col("doc_id_1").alias("doc_id_2"),
         )
     )
-    # evidenced docs are a tiny relation at any corpus size — per-round
-    # shuffle width is pure overhead (the _near_dup_cluster_labels lever)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with loop_width(spark, _MM_LOOP_WIDTH):
         labels = _propagate_min_labels(sym)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_docs")
     )

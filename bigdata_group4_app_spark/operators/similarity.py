@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import duck_md5_int, md5_int_sql
+from ..functions.iterative import loop_width
 from ..functions.vector_sql import duck_cosine_sql, duck_l2_sql
 from ..sources.registry import load_table
 from .dedup import COSINE_DUP_THRESHOLD, _cosine_expr, _l2_norm_expr
@@ -159,9 +160,9 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The quantizer fits on a DETERMINISTIC SAMPLE (vec_id % IVF_FIT_MOD
     == 0 — the FAISS recipe: a coarse quantizer needs balance, not
-    convergence, and never needs the full corpus), run as the house
-    fixed-point distributed Lloyd (the ``_kmeans_assign`` discipline:
-    init = the first IVF_K sample vectors, KMEANS_ROUNDS fixed rounds,
+    convergence, and never needs the full corpus), run through the
+    shared fixed-point distributed Lloyd loop ``_kmeans_assign`` (init =
+    the first IVF_K sample vectors, KMEANS_ROUNDS fixed rounds,
     6dp centroids / 8dp distances at every boundary, argmin ties on
     cell id) — so unlike the earlier driver-side numpy fit, every cell
     assignment REPLAYS EXACTLY in the DuckDB oracle via unrolled-round
@@ -184,51 +185,10 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("e"),
     )
     fit = emb.filter(F.col("vec_id") % IVF_FIT_MOD == 0).select("vec_id", "e")
-    # init: the first IVF_K sample members (cell ids keep their vec_id —
-    # ids only need to be distinct for the (d, k) tie order)
-    cents = (
-        fit.filter(F.col("vec_id") < IVF_K * IVF_FIT_MOD)
-        .select(F.col("vec_id").alias("k"), F.posexplode("e").alias("dim", "x"))
-        .select("k", "dim", F.round("x", 6).alias("c"))
-    )
+    # init: the first IVF_K sample members
+    _, cents, _ = _kmeans_assign(fit, IVF_K * IVF_FIT_MOD)
+    final_struct = _centroid_row(cents)
     rank_expr = _kmeans_ranked_cells_expr()
-
-    def to_struct(c: DataFrame) -> DataFrame:
-        return (
-            c.groupBy("k")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("sc")
-            )
-            .select("k", F.expr("transform(sc, s -> s.c)").alias("ce"))
-            .groupBy()
-            .agg(F.collect_list(F.struct("k", "ce")).alias("cs"))
-        )
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for _ in range(KMEANS_ROUNDS):
-            cent_struct = to_struct(cents)
-            # map-side argmin, THEN explode in a separate select (r13,
-            # guide §2.3/§2.4): no per-round join of the exploded fit
-            # sample on vec_id — the round's only shuffle is the (k, dim)
-            # partial agg. Two selects so the k-way HOF argmin is NOT
-            # hoisted above the Generate (once per vector, not per dim).
-            # Same rows into the same avg → identical centroids.
-            cents = (
-                fit.join(F.broadcast(cent_struct))
-                .select(
-                    F.expr(f"element_at({rank_expr}, 1).k").alias("k"),
-                    "e",
-                )
-                .select("k", F.posexplode("e").alias("dim", "x"))
-                .groupBy("k", "dim")
-                .agg(F.round(F.avg("x"), 6).alias("c"))
-                .localCheckpoint()
-            )
-        final_struct = to_struct(cents)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     # corpus assignment + query probing both rank against the FINAL
     # (post-round-3) centroids — one broadcast row, map-side
@@ -461,54 +421,60 @@ def _kmeans_ranked_cells_expr() -> str:
     )
 
 
-def _kmeans_assign(spark: SparkSession, sf_dir: str, k: int = KMEANS_K):
-    """The shared Lloyd loop: KMEANS_ROUNDS fixed rounds, deterministic
-    init (the first k vectors), 6dp centroid / 8dp distance rounding at
-    every boundary so both engines compare identical numbers. ``k``
-    defaults to the oracle-checked KMEANS_K; the scaled-k SemDeDup probe
-    passes the production ``k ∝ N`` value. Returns
-    ``(assigned, cents, cent_struct)`` — the final (vec_id, k)
-    assignment, the final (k, dim, c) centroid relation, and the 1-row
-    collected centroid-array table the final assignment ranked against
-    (so a consumer can re-rank to probe depth >1 consistently with
-    ``assigned``, which is rank 1 of ``_kmeans_ranked_cells_expr``).
-    ``kmeans_fit_centroids`` and ``semantic_dedup_pairs`` BOTH build on
-    this one loop (the shared-helper rule: an audit/consumer pair must
-    not drift apart)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
+def _centroid_row(cents: DataFrame) -> DataFrame:
+    """The 1-row table ``cs`` of ALL (k, ce) centroid arrays built from
+    a (k, dim, c) centroid relation — what ``_kmeans_ranked_cells_expr``
+    ranks against, so assignment is a pure map-side argmin against the
+    broadcast row: no shuffle of vector assignments at any corpus
+    size."""
+    return (
+        cents.groupBy("k")
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("sc"))
+        .select("k", F.expr("transform(sc, s -> s.c)").alias("ce"))
+        .groupBy()
+        .agg(F.collect_list(F.struct("k", "ce")).alias("cs"))
+    )
+
+
+def _embedding_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e): the whole corpus as the Lloyd loop's fit relation."""
+    return load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
+
+
+def _kmeans_assign(fit: DataFrame, init_bound: int = KMEANS_K):
+    """The shared Lloyd loop over the (vec_id, e) relation ``fit``:
+    KMEANS_ROUNDS fixed rounds, deterministic init (the ``fit`` rows
+    with vec_id < ``init_bound``; cell ids keep their vec_id), 6dp
+    centroid / 8dp distance rounding at every boundary so both engines
+    compare identical numbers. ``init_bound`` defaults to the
+    oracle-checked KMEANS_K over the full corpus; the scaled-k SemDeDup
+    probe passes the production ``k ∝ N`` and ``knn_ivf`` its sampled
+    fit's bound. Returns ``(assigned, cents, cent_struct)`` — the final
+    (vec_id, k) assignment, the final (k, dim, c) centroid relation, and
+    the ``_centroid_row`` the final assignment ranked against (so a
+    consumer can re-rank to probe depth >1 consistently with
+    ``assigned``, which is rank 1 of ``_kmeans_ranked_cells_expr``).
+    ``kmeans_fit_centroids``, ``semantic_dedup_pairs`` and ``knn_ivf``
+    all build on this one loop (the shared-helper rule: an
+    audit/consumer pair must not drift apart)."""
     cents = (
-        emb.filter(F.col("vec_id") < k)
+        fit.filter(F.col("vec_id") < init_bound)
         .select(F.col("vec_id").alias("k"), F.posexplode("e").alias("dim", "x"))
         .select("k", "dim", F.round("x", 6).alias("c"))
     )
     rank_expr = _kmeans_ranked_cells_expr()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with loop_width(fit.sparkSession, 8):
         assigned = cent_struct = None
         for _ in range(KMEANS_ROUNDS):
-            # 1-row table of ALL k centroid arrays: assignment becomes a
-            # pure map-side argmin against the broadcast row — no
-            # per-round shuffle of vector assignments at any corpus size
-            cent_struct = (
-                cents.groupBy("k")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("dim", "c"))
-                    ).alias("sc")
-                )
-                .select("k", F.expr("transform(sc, s -> s.c)").alias("ce"))
-                .groupBy()
-                .agg(F.collect_list(F.struct("k", "ce")).alias("cs"))
-            )
+            cent_struct = _centroid_row(cents)
             # assigned is NOT checkpointed: its recompute is one broadcast
             # map pass, and the cents checkpoint below already truncates
             # the round's lineage — one materialization job per round
             # instead of two measured ~15% off the whole loop at sf0.1
             assigned = (
-                emb.join(F.broadcast(cent_struct))
+                fit.join(F.broadcast(cent_struct))
                 .select(
                     "vec_id",
                     F.expr(f"element_at({rank_expr}, 1).k").alias("k"),
@@ -526,7 +492,7 @@ def _kmeans_assign(spark: SparkSession, sf_dir: str, k: int = KMEANS_K):
             # (measured 7x slower). Same rows into the same avg →
             # identical centroids (oracle-verified).
             cents = (
-                emb.join(F.broadcast(cent_struct))
+                fit.join(F.broadcast(cent_struct))
                 .select(
                     F.expr(f"element_at({rank_expr}, 1).k").alias("k"),
                     "e",
@@ -536,19 +502,17 @@ def _kmeans_assign(spark: SparkSession, sf_dir: str, k: int = KMEANS_K):
                 .agg(F.round(F.avg("x"), 6).alias("c"))
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return assigned, cents, cent_struct
 
 
 def kmeans_fit_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully DISTRIBUTED Lloyd k-means over the embeddings — k=4, three
-    fixed rounds, deterministic init (the first k vectors). Unlike
-    ``knn_ivf`` (whose quantizer fits on a driver-side sample, the FAISS
-    recipe), every step here is a DataFrame op: assignment is a map-side
-    fold against the BROADCAST k×d centroid table; the centroid update
-    is posexplode → partial-aggregating hash agg on (k, dim) — at 100 TB
-    the shuffle carries k·d partial sums per partition, never vectors.
+    fixed rounds, deterministic init (the first k vectors); ``knn_ivf``
+    runs the same loop on its 1-in-IVF_FIT_MOD sample. Every step is a
+    DataFrame op: assignment is a map-side fold against the BROADCAST
+    k×d centroid table; the centroid update is posexplode →
+    partial-aggregating hash agg on (k, dim) — at 100 TB the shuffle
+    carries k·d partial sums per partition, never vectors.
     Per-round ``localCheckpoint`` truncates the growing loop lineage and
     the tiny centroid tail runs at narrow shuffle width (CLAUDE.md
     iterative rules).
@@ -559,7 +523,7 @@ def kmeans_fit_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical numbers, so assignments can't diverge on last-bit float
     noise; argmin ties break on cluster id. Clusters that empty out drop
     deterministically on both engines (standard Lloyd dropout)."""
-    assigned, cents, _ = _kmeans_assign(spark, sf_dir)
+    assigned, cents, _ = _kmeans_assign(_embedding_vectors(spark, sf_dir))
     sizes = assigned.groupBy("k").agg(
         F.count(F.lit(1)).alias("n_vecs")
     )
@@ -1571,7 +1535,7 @@ def _semantic_pairs(
     layer must collapse exactly the pairs the pair report shows.
     ``k`` is the cell count (default: the oracle-checked KMEANS_K;
     ``semantic_dedup_pairs_scaled`` passes the production value)."""
-    _, _, cent_struct = _kmeans_assign(spark, sf_dir, k=k)
+    _, _, cent_struct = _kmeans_assign(_embedding_vectors(spark, sf_dir), k)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
@@ -1833,18 +1797,14 @@ def _semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id_a").alias("doc_id_1"),
         F.col("vec_id_b").alias("doc_id_2"),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # the semantic dup graph is CHAINS (measured: 863 edges, 14
     # propagation rounds at sf0.1 — rounds track component diameter,
     # not volume), so per-round fixed cost dominates: width 2 measured
     # fastest (4.2 s vs 5.6 s at near_dup_clusters' width 4; a second
     # pointer jump per round did NOT cut rounds — min labels still
     # travel one EDGE hop per round on chains)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with loop_width(spark, 2):
         return _star_components(edges)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _duck_semantic_survivors_sql() -> str:
@@ -1903,7 +1863,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the per-cell rank window, which at scale is a per-key
     TakeOrdered (bottom-k heaps, no global sort).
     """
-    assigned, _, _ = _kmeans_assign(spark, sf_dir)
+    assigned, _, _ = _kmeans_assign(_embedding_vectors(spark, sf_dir))
     pri = F.expr(md5_int_sql("CAST(vec_id AS STRING)")).alias("priority")
     wr = Window.partitionBy("cell").orderBy("priority", "vec_id")
     return (
@@ -2004,9 +1964,7 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
     # all m×k codeword arrays in ONE broadcast row; assignment is a pure
     # map-side argmin (the kmeans ranked-cells lever, keyed by subspace)
     rank_expr = _pq_ranked_codes_expr("m", "sv")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with loop_width(spark, 8):
         assigned = None
         for _ in range(PQ_ROUNDS):
             cent_struct = (
@@ -2045,8 +2003,6 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
                 .agg(F.round(F.avg("x"), 6).alias("c"))
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return subs, assigned, cent_struct
 
 
@@ -2215,7 +2171,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     id tie convention. ``tests/test_round6.py`` pins recall vs
     ``knn_brute_force``.
     """
-    _, _, km_cs = _kmeans_assign(spark, sf_dir)
+    _, _, km_cs = _kmeans_assign(_embedding_vectors(spark, sf_dir))
     _, _, pq_cs = _pq_fit(spark, sf_dir)
     # both broadcast tables expose a `cs` column — re-alias the PQ one
     pq_cs = pq_cs.select(F.col("cs").alias("pcs"))

@@ -25,6 +25,7 @@ from ..functions.hashing import (
     md5_int60_sql,
     md5_int_sql,
 )
+from ..functions.iterative import loop_width
 from ..sources.registry import load_table
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it", "that", "for")
@@ -1858,10 +1859,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     vocab = words.select(
         "c", F.expr("filter(split(w, ''), x -> x <> '')").alias("syms")
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     rows = []
-    try:
+    with loop_width(spark, 8):
         vocab = vocab.localCheckpoint()
         for r in range(1, BPE_ENC_MERGES + 1):
             top = (
@@ -1904,8 +1903,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
                 F.sum(F.col("c") * F.size("syms")).alias("t")
             ).collect()[0]["t"]
             rows.append((r, pair, int(cnt), int(tok)))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return rows, vocab, n_docs
 
 
@@ -2096,9 +2093,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w")
     )
     deg = dir_edges.groupBy("src").agg(F.sum("w").alias("wdeg"))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with loop_width(spark, 8):
         dir_edges = dir_edges.join(deg, "src").localCheckpoint()
         nodes = deg.select(F.col("src").alias("word")).localCheckpoint()
         scores = nodes.select(
@@ -2128,8 +2123,6 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     wr = Window.orderBy(F.desc("score"), "word")
     return (
         scores.withColumn("rank", F.row_number().over(wr))

@@ -1,12 +1,15 @@
 #!/usr/bin/env python
-"""Measure per-query Spark JOB counts plus isolated wall time.
+"""Isolated steady-state re-measure: per-query wall time plus Spark JOB
+counts.
 
-Job-floor evidence for iterative-loop changes (round 14): the loops are
-bounded by rounds x the per-job scheduling floor at bench SF, so the
-checkable artifact for a convergence-check optimization is the number of
-jobs a query launches, measured via the status tracker across one
-materialization. Wall time follows adjudicate.py's protocol (warmup +
-N cache-cleared passes, min).
+Protocol: fresh session -> per query: 1 untimed warmup (codegen/JIT)
+-> clearCache -> N timed cache-cleared passes -> report each pass, the
+min (the steady state SCALE.md records) and each pass's job count. Use
+it to adjudicate driver-bench outliers (noise vs real) and as the
+job-floor evidence for iterative-loop changes: the loops are bounded by
+rounds x the per-job scheduling floor at bench SF, so the checkable
+artifact is the number of jobs a query launches, measured via the
+status tracker across one materialization.
 
 Usage:
   python scripts/jobcount.py q1,q2,... [--passes 3] [--sf-dir DIR]

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
-"""Mechanical plan audit over EVERY registered query (r13 optimization
-round): one TSV row per query with the plan-shape counters that matter
-for scale — exchanges by kind, join strategies, Python-boundary nodes,
-generators, windows — plus flags for un-pruned scans (ReadSchema wider
-than 8 columns) and non-final range exchanges.
+"""Mechanical plan audit over EVERY registered query: one TSV row per
+query with the plan-shape counters that matter for scale — exchanges by
+kind, join strategies, Python-boundary nodes, generators, windows — plus
+flags for un-pruned scans (ReadSchema wider than 8 columns) and
+non-final range exchanges.
 
-Output: plans/r13/plan_audit.tsv   (query \t counter=value ...)
+Usage: python scripts/plan_audit.py OUT_DIR
+Output: OUT_DIR/plan_audit.tsv   (query \t counter=value ...)
 """
 
 from __future__ import annotations
@@ -21,9 +22,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from bigdata_group4_app_spark.registry import QUERY_REGISTRY  # noqa: E402
-
-SF_DIR = "/root/testdata/sf0.01"
-OUT = Path(__file__).resolve().parent.parent / "plans" / "r13"
+from drive_contract import SF as SF_DIR  # noqa: E402  (the oracle SF)
 
 COUNTERS = [
     # counted over the FULL output: each Exchange node carries exactly
@@ -48,13 +47,14 @@ COUNTERS = [
 def main() -> None:
     spark = (
         SparkSession.builder.master("local[8]")
-        .appName("plan-audit-r13")
+        .appName("plan-audit")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    OUT.mkdir(parents=True, exist_ok=True)
+    out = Path(sys.argv[1])
+    out.mkdir(parents=True, exist_ok=True)
     rows = []
     for name in sorted(QUERY_REGISTRY):
         try:
@@ -85,7 +85,7 @@ def main() -> None:
             + "\t".join(f"{k}={v}" for k, v in vals.items() if v)
         )
         spark.catalog.clearCache()
-    (OUT / "plan_audit.tsv").write_text("\n".join(rows) + "\n")
+    (out / "plan_audit.tsv").write_text("\n".join(rows) + "\n")
     print(f"wrote {len(rows)} rows")
     spark.stop()
 

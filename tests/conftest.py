@@ -26,13 +26,16 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="session")
-def duck():
-    con = duckdb.connect()
-    for sf in (SF_SMOKE, SF_CORRECT):
-        pass
-    yield con
-    con.close()
+def jobs_during(spark, fn, tag: str):
+    """Run ``fn()`` under job group ``tag``; return its result and the ids
+    of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup(f"{tag}-done", f"{tag}-done")
+    return result, list(sc.statusTracker().getJobIdsForGroup(tag))
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

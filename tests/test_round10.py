@@ -7,18 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
-
-
-def _jobs_during(spark, fn, tag: str):
-    """Run fn() under a job group and return the job ids it triggered."""
-    sc = spark.sparkContext
-    sc.setJobGroup(tag, tag)
-    try:
-        result = fn()
-    finally:
-        sc.setJobGroup(f"{tag}-done", f"{tag}-done")
-    return result, list(sc.statusTracker().getJobIdsForGroup(tag))
+from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle, jobs_during
 
 
 class TestRaConstructionIsLazy:
@@ -35,7 +24,7 @@ class TestRaConstructionIsLazy:
         from bigdata_group4_app_spark.operators import graph
 
         for builder in (graph.ra_link_prediction, graph.ra_link_prediction_scaled):
-            _, jobs = _jobs_during(
+            _, jobs = jobs_during(
                 spark,
                 lambda: builder(spark, SF_CORRECT),
                 f"construct-{builder.__name__}",

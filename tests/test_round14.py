@@ -6,7 +6,7 @@ convergence aggregates during the eager localCheckpoint's own job is
 (a) exact — identical numbers to a separate count()/filter-count, and
 (b) free — no extra Spark job beyond the checkpoint's; and that the
 capture-mode fallback (identity-patched localCheckpoint, as
-scripts/capture_plan_r14.py does) cannot deadlock. The loop outputs
+scripts/capture_plan.py does) cannot deadlock. The loop outputs
 themselves stay pinned by their oracle checks and the older suites;
 these tests pin the MECHANISM so a refactor can't silently turn the
 metrics into estimates or resurrect the per-round count job.
@@ -19,7 +19,10 @@ import pytest
 
 from bigdata_group4_app_spark.functions.iterative import (
     checkpoint_with_metrics,
+    loop_width,
 )
+
+from .conftest import jobs_during
 
 
 @pytest.fixture(scope="module")
@@ -47,22 +50,18 @@ class TestCheckpointWithMetrics:
         assert out.columns == ["k", "flag"]
 
     def test_zero_extra_jobs_beyond_checkpoint(self, spark, skewed_df):
-        sc = spark.sparkContext
         agg = skewed_df.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
-        # baseline: checkpoint + separate count (the pre-r14 loop shape)
-        sc.setJobGroup("r14-base", "base")
-        ck = agg.localCheckpoint()
-        ck.count()
-        base_jobs = len(sc.statusTracker().getJobIdsForGroup("r14-base"))
-        # folded: metrics ride the checkpoint job
-        sc.setJobGroup("r14-fold", "fold")
-        _, m = checkpoint_with_metrics(
-            agg, F.count(F.lit(1)).alias("n")
+        n = F.count(F.lit(1)).alias("n")
+        _, bare = jobs_during(spark, agg.localCheckpoint, "r14-bare")
+        # the pre-r14 loop shape: checkpoint + separate count
+        _, base = jobs_during(spark, lambda: agg.localCheckpoint().count(), "r14-base")
+        (_, m), fold = jobs_during(
+            spark, lambda: checkpoint_with_metrics(agg, n), "r14-fold"
         )
-        fold_jobs = len(sc.statusTracker().getJobIdsForGroup("r14-fold"))
-        sc.setJobGroup("", "")
         assert m["n"] == 101
-        assert fold_jobs < base_jobs  # the count job is gone
+        assert len(fold) < len(base)  # the count job is gone
+        # no fallback count on a real checkpoint: exactly a bare checkpoint
+        assert len(fold) == len(bare)
 
     def test_identity_checkpoint_fallback_no_deadlock(self, spark, skewed_df):
         # plan-capture scripts patch localCheckpoint to identity; the
@@ -92,6 +91,18 @@ class TestCheckpointWithMetrics:
         # (the _star_components n_new metric relies on exactly this)
         assert m["n"] == 0
         assert m["s"] == 0
+
+
+def test_loop_width_scopes_and_restores(spark):
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    with loop_width(spark, 3) as n:
+        assert (n, spark.conf.get(key)) == (3, "3")
+    assert spark.conf.get(key) == prev
+    with pytest.raises(RuntimeError):  # restored when a round fails too
+        with loop_width(spark, 5):
+            raise RuntimeError("round failed")
+    assert spark.conf.get(key) == prev
 
 
 class TestLoopRewritesStillConverge:

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from bigdata_group4_app_spark.functions.skew import salted_join, write_bucketed
 from bigdata_group4_app_spark.sources.registry import load_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, jobs_during
 
 
 def _physical_plan(df) -> str:
@@ -327,17 +327,12 @@ def audited_queries(spark):
     paid once."""
     from bigdata_group4_app_spark.registry import QUERY_REGISTRY
 
-    sc = spark.sparkContext
     out: dict[str, tuple] = {}
     for name, fn in QUERY_REGISTRY.items():
-        tag = f"audit-construct-{name}"
-        sc.setJobGroup(tag, tag)
-        try:
-            df = fn(spark, SF_SMOKE)
-        finally:
-            sc.setJobGroup("audit-construct-done", "done")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
-        out[name] = (df, jobs)
+        df, jobs = jobs_during(
+            spark, lambda: fn(spark, SF_SMOKE), f"audit-construct-{name}"
+        )
+        out[name] = (df, len(jobs))
     return out
 
 
