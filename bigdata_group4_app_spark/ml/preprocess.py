@@ -74,16 +74,6 @@ def onehot_sql(col: str, category: str, q: str = '"') -> str:
     )
 
 
-def feature_columns() -> list[tuple[str, Column]]:
-    """All 15 model features in booster order, as named Columns."""
-    feats: list[tuple[str, Column]] = [
-        (col, scaled_numeric(col)) for col in NUMERIC_STATS
-    ]
-    for col, (_, cats) in CATEGORICAL_STATS.items():
-        feats.extend((f"{col}={cat}", onehot(col, cat)) for cat in cats)
-    return feats
-
-
 def fit_preprocess_params(df: DataFrame) -> dict:
     """Spark-native fit: learn medians/means/stds/modes from data.
 

@@ -501,10 +501,13 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-normalization per half-step.
 
     Scale shape: identical to the PageRank loop — each half-step is ONE
-    shuffle of the edge relation keyed by the gathering endpoint, the
-    normalizing max is a broadcast scalar, and ``localCheckpoint`` per
-    round truncates the iterative plan. Written exactly as it runs on a
-    billion-edge graph.
+    shuffle of the edge relation keyed by the gathering endpoint, and
+    the gather's ``localCheckpoint`` truncates the iterative plan. The
+    normalizing max is observed during that checkpoint's own job
+    (``checkpoint_with_metrics``) and enters the next projection as a
+    double literal; an empty graph observes no max and falls back to
+    ``1.0`` (there is no score to normalize). Written exactly as it runs
+    on a billion-edge graph.
 
     Cross-engine exactness — STRONGER than the PageRank float
     discipline: scores never exist as accumulated floats. They are

@@ -87,6 +87,32 @@ def read_manifest(catalog_dir: str, snapshot_id: int) -> dict:
         return json.load(f)
 
 
+def _put_if_absent(final: str, body: dict) -> bool:
+    """The catalog's put-if-absent commit: write ``body`` as JSON to a
+    writer-private temp file beside ``final``, ``os.link`` it to
+    ``final`` (atomic; fails if the name is taken), remove the temp.
+    True = this writer owns ``final``.
+
+    The temp name carries a uuid4, not just the pid: two SAME-process
+    writers racing one name (ingest + compaction threads on
+    one driver) must each link their own private bytes — a shared
+    pid-keyed temp file lets the link winner publish the loser's
+    content as its own."""
+    import uuid
+
+    head, base = os.path.split(final)
+    tmp = os.path.join(head, f".{base}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(body, f)
+    try:
+        os.link(tmp, final)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 def _try_put_manifest(
     catalog_dir: str,
     nxt: int,
@@ -98,22 +124,8 @@ def _try_put_manifest(
     committed_at: int | None = None,
     branch: str | None = None,
 ) -> bool:
-    """The single put-if-absent commit step both commit paths share:
-    write the manifest to a writer-private temp file, ``os.link`` it to
-    its final name (atomic; fails if the id is taken), clean up the
-    temp. True = this writer owns snapshot ``nxt``.
-
-    The temp name carries a uuid4, not just the pid (review r12): two
-    SAME-process writers racing one id (ingest + compaction threads on
-    one driver) must each link their own private bytes — a shared
-    pid-keyed temp file lets the link winner publish the loser's
-    manifest content as its own."""
-    import uuid
-
-    final = _snap_path(catalog_dir, nxt)
-    tmp = os.path.join(
-        catalog_dir, f".snap-{nxt}.{uuid.uuid4().hex}.tmp"
-    )
+    """The single manifest commit step both commit paths share (see
+    :func:`_put_if_absent`). True = this writer owns snapshot ``nxt``."""
     body = {
         "id": nxt,
         "parent": parent,
@@ -135,15 +147,7 @@ def _try_put_manifest(
     # resolves past them: staging on a branch must never move main
     if branch is not None:
         body["branch"] = branch
-    with open(tmp, "w") as f:
-        json.dump(body, f)
-    try:
-        os.link(tmp, final)
-        os.unlink(tmp)
-        return True
-    except FileExistsError:
-        os.unlink(tmp)
-        return False
+    return _put_if_absent(_snap_path(catalog_dir, nxt), body)
 
 
 def commit_snapshot(
@@ -976,23 +980,14 @@ def resolve_ref(catalog_dir: str, name: str) -> int:
 def _put_ref_version(
     catalog_dir: str, name: str, ver: int, snapshot_id: int, rtype: str
 ) -> bool:
-    """Put-if-absent a ref version file (uuid temp + os.link, the
-    manifest claim protocol). True = this writer owns version ver."""
-    import uuid
-
+    """Put-if-absent a ref version file (:func:`_put_if_absent`). True =
+    this writer owns version ver."""
     rd = _ref_dir(catalog_dir, name)
     os.makedirs(rd, exist_ok=True)
-    final = os.path.join(rd, f"{ver:06d}.json")
-    tmp = os.path.join(rd, f".{ver}.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"snapshot_id": snapshot_id, "type": rtype}, f)
-    try:
-        os.link(tmp, final)
-        os.unlink(tmp)
-        return True
-    except FileExistsError:
-        os.unlink(tmp)
-        return False
+    return _put_if_absent(
+        os.path.join(rd, f"{ver:06d}.json"),
+        {"snapshot_id": snapshot_id, "type": rtype},
+    )
 
 
 def create_ref(
@@ -1391,14 +1386,6 @@ def _bloom_pos_py(key: int, seed: int) -> int:
 
     h = hashlib.md5(f"{seed}|{key}".encode()).hexdigest()
     return int(h[:8], 16) % BLOOM_M
-
-
-def duck_bloom_pos(col: str, seed: int) -> str:
-    """DuckDB twin of :func:`_bloom_pos_spark`."""
-    return (
-        f"CAST(('0x' || substr(md5(concat('{seed}|', "
-        f"CAST({col} AS VARCHAR))), 1, 8)) AS BIGINT) % {BLOOM_M}"
-    )
 
 
 def compute_segment_blooms(

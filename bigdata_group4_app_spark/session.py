@@ -29,46 +29,20 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # Python DataSource filter pushdown (sources/pydatasource.py): a
-        # reader implementing pushFilters() hard-errors when this is off
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        # Manifest-backed readers (snapshot catalog, streaming segment
-        # stores) pass their O(segments) path list explicitly — the
-        # manifest IS the listing. Spark's default threshold (32 paths)
-        # turns those constructions into a distributed LISTING JOB,
-        # which on a local FS costs more than it saves (measured 0.62 →
-        # 0.35 s per 64-segment read at sf0.1). Parameterized: on
-        # object-store deployments with very wide tables, lower it via
-        # the env knob so listing parallelizes again (r13 optimization,
-        # guide §6).
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LISTING_JOB_THRESHOLD", "128"),
-        )
-        # let AQE re-plan ON TOP of InMemoryRelations: default-false pins
-        # a cached plan's pre-AQE output partitioning, which penalizes
-        # the round-10 persist()-shared subtrees (interleaved A/B at
-        # sf0.1: peak_concurrent_sessions 1.46→1.17s, copurchase
-        # 2.74→1.95s, markov 0.85→0.69s, none slower)
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return tune_session(spark)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally provided session.
+    """Apply the engine's runtime confs to a session: ``get_spark``'s own,
+    or an externally provided one.
 
     The driver hands ``entry()``/``queries()`` its own SparkSession; these
     runtime confs keep semantics deterministic (UTC timestamps so
@@ -79,13 +53,26 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # events.ts is parquet TIMESTAMP(NANOS); read as raw int64 (see registry)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Python DataSource filter pushdown (sources/pydatasource.py): a
+    # reader implementing pushFilters() hard-errors when this is off
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    # AQE on top of cached plans (see get_spark) — runtime-settable
+    # let AQE re-plan ON TOP of InMemoryRelations: default-false pins
+    # a cached plan's pre-AQE output partitioning, which penalizes
+    # the round-10 persist()-shared subtrees (interleaved A/B at
+    # sf0.1: peak_concurrent_sessions 1.46→1.17s, copurchase
+    # 2.74→1.95s, markov 0.85→0.69s, none slower)
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
     )
-    # manifest-backed path lists never need a distributed listing job at
-    # this width (see get_spark; runtime-settable, driver-session safe)
+    # Manifest-backed readers (snapshot catalog, streaming segment
+    # stores) pass their O(segments) path list explicitly — the
+    # manifest IS the listing. Spark's default threshold (32 paths)
+    # turns those constructions into a distributed LISTING JOB,
+    # which on a local FS costs more than it saves (measured 0.62 →
+    # 0.35 s per 64-segment read at sf0.1). Parameterized: on
+    # object-store deployments with very wide tables, lower it via
+    # the env knob so listing parallelizes again (r13 optimization,
+    # guide §6).
     spark.conf.set(
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
         os.environ.get("SPARK_GRAFT_LISTING_JOB_THRESHOLD", "128"),

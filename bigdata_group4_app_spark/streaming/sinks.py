@@ -47,26 +47,30 @@ def start_dedup_append_sink(
     )
 
 
-def _latest_state_version(state_dir: str) -> int | None:
-    """Highest COMMITTED state version under ``state_dir`` (a version is
-    committed iff its _SUCCESS marker exists — a crash mid-write leaves
-    a marker-less directory that is simply ignored and overwritten on
-    replay). Local-FS pointer logic; on a real lake this whole
-    versioning concern is what a Delta/Iceberg transactional MERGE
-    replaces."""
+def _committed_versions(state_dir: str) -> list[int]:
+    """All committed versions under ``state_dir``, ascending. A version
+    is committed iff its version-level _SUCCESS marker exists: a crash
+    mid-write leaves a marker-less directory that readers ignore.
+    Local-FS pointer logic; on a real lake this whole versioning concern
+    is what a Delta/Iceberg transactional commit replaces."""
     import os
 
     if not os.path.isdir(state_dir):
-        return None
-    best = None
-    for d in os.listdir(state_dir):
-        if (
-            d.startswith("v")
-            and d[1:].isdigit()
-            and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
-        ):
-            best = int(d[1:]) if best is None else max(best, int(d[1:]))
-    return best
+        return []
+    return sorted(
+        int(d[1:])
+        for d in os.listdir(state_dir)
+        if d.startswith("v")
+        and d[1:].isdigit()
+        and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
+    )
+
+
+def _latest_state_version(state_dir: str) -> int | None:
+    """Highest committed CDC state version (an uncommitted one is
+    overwritten on replay), or None before the first commit."""
+    committed = _committed_versions(state_dir)
+    return committed[-1] if committed else None
 
 
 def read_cdc_state(spark, state_dir: str) -> DataFrame | None:
@@ -156,22 +160,6 @@ def merge_cdc_state(batch_df: DataFrame, state_dir: str) -> None:
 # operators.dedup.incremental_minhash_lsh (VERDICT r8 item 6: the
 # daily-ingest story continued past batch)
 # ---------------------------------------------------------------------------
-
-
-def _committed_versions(state_dir: str) -> list[int]:
-    """All committed segment versions under ``state_dir`` (committed iff
-    the version-level _SUCCESS marker exists)."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return []
-    return sorted(
-        int(d[1:])
-        for d in os.listdir(state_dir)
-        if d.startswith("v")
-        and d[1:].isdigit()
-        and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
-    )
 
 
 def _claim_version(state_dir: str) -> int:
@@ -846,26 +834,6 @@ def abandon_staging(
         branch,
         resolve_ref(catalog_dir, branch),
         resolve_ref(catalog_dir, "main"),
-    )
-
-
-def start_catalog_sink(
-    stream_df: DataFrame, catalog_dir: str, checkpoint_dir: str
-):
-    """Streaming writer for the multi-table snapshot catalog:
-    ``foreachBatch`` commits one atomic snapshot per micro-batch via
-    :func:`catalog_commit_step` — documents appended as immutable
-    segments, the stats table rewritten, both visible atomically
-    through the manifest. Readers pinned to earlier snapshots are
-    unaffected mid-stream (pinned manifests never move)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        catalog_commit_step(batch_df, catalog_dir)
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )
 
 

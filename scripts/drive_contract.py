@@ -1,13 +1,20 @@
 """Drive the driver contract surface exactly as the verify driver does:
 import __spark_entry__, smoke entry(spark) at sf0.001, then run every
 queries() entry at sf0.01 and hash-compare against oracle_sql() via DuckDB
-with the testdata views pre-registered."""
+with the testdata views pre-registered.
 
+Usage: python scripts/drive_contract.py [name ...]   (no names = all)
+
+``compare`` is the engine's one oracle comparator; the test suite's
+oracle checks (tests/conftest.py) call it too."""
+
+import collections
 import hashlib
 import math
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -37,10 +44,14 @@ def norm(v):
     return str(v)
 
 
-def value_hash(rows, cols):
+def _lines(rows, cols):
+    """Each row as one normalised line, columns in name order; sorted."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(norm(r[i]) for i in order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+    return sorted("|".join(norm(r[i]) for i in order) for r in rows)
+
+
+def value_hash(rows, cols):
+    return hashlib.sha256("\n".join(_lines(rows, cols)).encode()).hexdigest()[:16]
 
 
 # driver-safe result types: anything else (DuckDB HUGEINT→decimal128,
@@ -63,6 +74,49 @@ def bad_arrow_types(schema):
     ]
 
 
+def oracle_con(sf_dir=SF):
+    """DuckDB connection with the testdata tables registered as views."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(name, sdf, con, oracle):
+    """The contract check of one query: collect the Spark frame ``sdf``,
+    run ``oracle`` on ``con``, and require equal row counts, equal column
+    sets, equal order-insensitive value hashes and oracle column types
+    that ``bad_arrow_types`` accepts. Returns ``(ok, report)``; ``report`` is the lines
+    printed for ``name``, with the differing rows on a mismatch."""
+    srows = [tuple(r) for r in sdf.collect()]
+    scols = sdf.columns
+    otbl = con.execute(oracle).arrow()
+    orows = [tuple(r.values()) for r in otbl.to_pylist()]
+    ocols = otbl.schema.names
+    typebad = bad_arrow_types(otbl.schema)
+    sh, oh = value_hash(srows, scols), value_hash(orows, ocols)
+    ok = (
+        len(srows) == len(orows)
+        and sorted(scols) == sorted(ocols)
+        and sh == oh
+        and not typebad
+    )
+    report = [f"TYPE-HAZARD {name}: oracle columns {typebad}"] if typebad else []
+    report.append(
+        f"{'MATCH' if ok else 'MISMATCH'} {name}: spark {len(srows)}x{len(scols)} "
+        f"hash={sh} | oracle {len(orows)}x{len(ocols)} hash={oh}"
+    )
+    if not ok:
+        report.append(f"   spark cols: {scols}")
+        report.append(f"   oracle cols: {ocols}")
+        slines, olines = _lines(srows, scols), _lines(orows, ocols)
+        s_only = collections.Counter(slines) - collections.Counter(olines)
+        o_only = collections.Counter(olines) - collections.Counter(slines)
+        report += [f"   spark only : {x}" for x in list(s_only.elements())[:3]]
+        report += [f"   oracle only: {x}" for x in list(o_only.elements())[:3]]
+    return ok, "\n".join(report)
+
+
 def main():
     spark = (
         SparkSession.builder.master("local[8]")
@@ -81,14 +135,11 @@ def main():
     print("  ", rows[0].asDict())
 
     # 2. correctness: every query vs oracle at sf0.01
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
+    con = oracle_con()
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     # optional argv filter: check only the named queries (spot-check a
-    # change without the full 240-query sweep); no argv = full sweep
+    # change without the full sweep); no argv = full sweep
     if len(sys.argv) > 1:
         want = set(sys.argv[1:])
         unknown = want - qs.keys()
@@ -98,34 +149,12 @@ def main():
     n_match = 0
     for name, fn in sorted(qs.items()):
         sdf = fn(spark, SF)
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = sdf.columns
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows")
+            print(f"ROWS-ONLY {name}: {len(sdf.collect())} rows")
             continue
-        otbl = con.execute(oracles[name]).arrow()
-        orows = [tuple(r.values()) for r in otbl.to_pylist()]
-        ocols = otbl.schema.names
-        typebad = bad_arrow_types(otbl.schema)
-        if typebad:
-            print(f"TYPE-HAZARD {name}: oracle columns {typebad}")
-        sh, oh = value_hash(srows, scols), value_hash(orows, ocols)
-        ok = (
-            len(srows) == len(orows)
-            and sorted(scols) == sorted(ocols)
-            and sh == oh
-            and not typebad
-        )
+        ok, report = compare(name, sdf, con, oracles[name])
         n_match += ok
-        print(
-            f"{'MATCH' if ok else 'MISMATCH'} {name}: spark {len(srows)}x{len(scols)} "
-            f"hash={sh} | oracle {len(orows)}x{len(ocols)} hash={oh}"
-        )
-        if not ok:
-            print("   spark cols:", scols)
-            print("   oracle cols:", ocols)
-            for a, b in list(zip(sorted(srows), sorted(orows)))[:3]:
-                print("   s:", a, "\n   o:", b)
+        print(report)
     print(f"\n{n_match}/{len(oracles)} oracle-checked queries match")
     spark.stop()
     return 0 if n_match == len(oracles) else 1

@@ -1,22 +1,24 @@
-"""Shared fixtures: one SparkSession per test session + a DuckDB oracle
-comparator that mirrors the driver's check (row-count + schema-width +
-order-insensitive value comparison with FP tolerance)."""
+"""Shared fixtures: one SparkSession per test session, the smoke and
+correctness scale factors, and ``assert_matches_oracle``, which applies
+the contract's per-query check (``scripts/drive_contract.py::compare``:
+row count, column set, full-precision value hash, fetch-safe oracle
+types). ``check_registered`` runs that check for a registered query."""
 
 from __future__ import annotations
 
-import math
+import pathlib
+import sys
 
-import duckdb
 import pytest
 
+from bigdata_group4_app_spark.registry import ORACLE_REGISTRY, QUERY_REGISTRY
 from bigdata_group4_app_spark.session import get_spark
+
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "scripts"))
+from drive_contract import compare, oracle_con  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -38,71 +40,20 @@ def jobs_during(spark, fn, tag: str):
     return result, list(sc.statusTracker().getJobIdsForGroup(tag))
 
 
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """Fresh DuckDB connection with the testdata tables registered as views,
-    exactly like the driver does."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
-
-
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 6)
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm_cell(x) for x in v)
-    try:  # Decimal and numpy scalars
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return round(float(v), 6)
-    except Exception:
-        pass
-    return v
-
-
 def assert_matches_oracle(spark_df, oracle_query: str, sf_dir: str):
-    """Order-insensitive comparison of a Spark result vs DuckDB SQL."""
-    con = duck_con(sf_dir)
+    """Fail unless ``spark_df`` passes the contract check against the
+    DuckDB ``oracle_query`` over the testdata tables at ``sf_dir``."""
+    con = oracle_con(sf_dir)
     try:
-        oracle_rows = con.execute(oracle_query).fetchall()
-        oracle_cols = [d[0] for d in con.description]
+        ok, report = compare("query", spark_df, con, oracle_query)
     finally:
         con.close()
+    assert ok, report
 
-    spark_cols = spark_df.columns
-    assert sorted(spark_cols) == sorted(oracle_cols), (
-        f"column mismatch: spark={sorted(spark_cols)} oracle={sorted(oracle_cols)}"
-    )
-    spark_rows = [tuple(r) for r in spark_df.collect()]
-    assert len(spark_rows) == len(oracle_rows), (
-        f"row count mismatch: spark={len(spark_rows)} oracle={len(oracle_rows)}"
-    )
 
-    # align column order by sorted name, then compare as multisets
-    s_idx = [spark_cols.index(c) for c in sorted(spark_cols)]
-    o_idx = [oracle_cols.index(c) for c in sorted(oracle_cols)]
-    # sort key stringifies cells (the driver does the same) so NULL-bearing
-    # rows are orderable; equality still compares the typed tuples
-    def _key(row):
-        return tuple(str(c) for c in row)
-
-    s_set = sorted(
-        (tuple(_norm_cell(r[i]) for i in s_idx) for r in spark_rows),
-        key=_key,
+def check_registered(spark, name: str, sf_dir: str):
+    """``assert_matches_oracle`` for the registered query ``name`` against
+    its registered oracle at ``sf_dir``."""
+    assert_matches_oracle(
+        QUERY_REGISTRY[name](spark, sf_dir), ORACLE_REGISTRY[name], sf_dir
     )
-    o_set = sorted(
-        (tuple(_norm_cell(r[i]) for i in o_idx) for r in oracle_rows),
-        key=_key,
-    )
-    for a, b in zip(s_set, o_set):
-        assert a == b, f"row mismatch:\n  spark : {a}\n  oracle: {b}"

@@ -7,17 +7,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bigdata_group4_app_spark.operators.advanced import ORACLE, QUERIES
+from bigdata_group4_app_spark.operators.advanced import QUERIES
 from bigdata_group4_app_spark.sources.registry import load_table
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_advanced_oracle(spark, name):
-    assert_matches_oracle(
-        QUERIES[name](spark, SF_SMOKE), ORACLE[name], SF_SMOKE
-    )
+    check_registered(spark, name, SF_SMOKE)
 
 
 def test_scd2_intervals_tile(spark):

@@ -5,13 +5,12 @@ import pytest
 from bigdata_group4_app_spark.operators import analytics
 from bigdata_group4_app_spark.plans.churn import churn_customers
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(analytics.QUERIES))
 def test_oracle_parity_sf001(spark, name):
-    df = analytics.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, analytics.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_churn_schema(spark):
@@ -57,9 +56,7 @@ def test_registry_consistency():
 
 
 def test_age_kde_oracle(spark):
-    from bigdata_group4_app_spark.operators.analytics import ORACLE, age_kde
-
-    assert_matches_oracle(age_kde(spark, SF_SMOKE), ORACLE["age_kde"], SF_SMOKE)
+    check_registered(spark, "age_kde", SF_SMOKE)
 
 
 def test_with_customer_id_fallback(spark):

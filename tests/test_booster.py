@@ -1,12 +1,11 @@
-"""Tree-parity scorer tests: restricted artifact parse, gbtree eval
-semantics, and end-to-end oracle parity (reference app_test.py:235-296)."""
+"""Tree-parity scorer tests: restricted artifact parse and gbtree eval
+semantics (reference app_test.py:235-296). The end-to-end oracle check
+of ``churn_score_booster`` is in test_oracle.py."""
 
 import numpy as np
 import pytest
 
 from bigdata_group4_app_spark.ml import booster
-
-from .conftest import SF_CORRECT, assert_matches_oracle
 
 pytestmark = pytest.mark.skipif(
     not booster.booster_available(), reason="reference artifact not on disk"
@@ -75,11 +74,6 @@ def test_predict_proba_bounds_and_bias(model):
     """sigmoid(bias) alone must equal base_score (boost_from_average)."""
     zero_margin_p = 1.0 / (1.0 + np.exp(-model["bias"]))
     assert zero_margin_p == pytest.approx(model["base_score"], abs=1e-7)
-
-
-def test_booster_oracle_parity(spark):
-    df = booster.churn_score_booster(spark, SF_CORRECT)
-    assert_matches_oracle(df, booster.ORACLE["churn_score_booster"], SF_CORRECT)
 
 
 def test_score_upload_booster_route(spark):

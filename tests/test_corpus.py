@@ -5,13 +5,12 @@ import pytest
 
 from bigdata_group4_app_spark.operators import corpus
 
-from .conftest import SF_CORRECT, assert_matches_oracle
+from .conftest import SF_CORRECT, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(corpus.QUERIES))
 def test_corpus_oracle_parity(spark, name):
-    df = corpus.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, corpus.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_redaction_scrubs_blocklist(spark):

@@ -2,14 +2,11 @@
 
 from bigdata_group4_app_spark.operators import graph
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 def test_pagerank_oracle_parity(spark):
-    df = graph.trade_network_pagerank(spark, SF_CORRECT)
-    assert_matches_oracle(
-        df, graph.ORACLE["trade_network_pagerank"], SF_CORRECT
-    )
+    check_registered(spark, "trade_network_pagerank", SF_CORRECT)
 
 
 def test_pagerank_replay(spark):

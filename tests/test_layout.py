@@ -2,14 +2,11 @@
 
 from bigdata_group4_app_spark.operators import layout
 
-from .conftest import SF_CORRECT, assert_matches_oracle
+from .conftest import SF_CORRECT, check_registered
 
 
 def test_zorder_oracle_parity(spark):
-    df = layout.zorder_tile_stats(spark, SF_CORRECT)
-    assert_matches_oracle(
-        df, layout.ORACLE["zorder_tile_stats"], SF_CORRECT
-    )
+    check_registered(spark, "zorder_tile_stats", SF_CORRECT)
 
 
 def _z(x: int, y: int) -> int:
@@ -47,10 +44,7 @@ def test_zorder_tiles_tighten_zone_maps(spark):
 
 
 def test_layout_skipping_parity(spark):
-    df = layout.layout_skipping_compare(spark, SF_CORRECT)
-    assert_matches_oracle(
-        df, layout.ORACLE["layout_skipping_compare"], SF_CORRECT
-    )
+    check_registered(spark, "layout_skipping_compare", SF_CORRECT)
 
 
 def test_zorder_reads_fewest_files(spark):

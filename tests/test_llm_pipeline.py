@@ -5,25 +5,22 @@ from pyspark.sql import functions as F
 
 from bigdata_group4_app_spark.operators import dedup, similarity, text
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(text.QUERIES))
 def test_text_oracle_parity(spark, name):
-    df = text.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, text.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 @pytest.mark.parametrize("name", sorted(dedup.QUERIES))
 def test_dedup_oracle_parity(spark, name):
-    df = dedup.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, dedup.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 @pytest.mark.parametrize("name", sorted(similarity.ORACLE))
 def test_similarity_oracle_parity(spark, name):
-    df = similarity.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, similarity.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_minhash_finds_injected_near_dups(spark):

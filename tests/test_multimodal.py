@@ -6,13 +6,12 @@ from __future__ import annotations
 import pytest
 
 from bigdata_group4_app_spark.operators.multimodal import (
-    ORACLE,
     QUERIES,
     decode_image,
     media_table,
 )
 
-from .conftest import SF_SMOKE, assert_matches_oracle
+from .conftest import SF_SMOKE, check_registered
 
 
 def test_media_table_schema(spark):
@@ -31,6 +30,4 @@ def test_decode_stub_is_gated():
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_multimodal_oracle(spark, name):
-    assert_matches_oracle(
-        QUERIES[name](spark, SF_SMOKE), ORACLE[name], SF_SMOKE
-    )
+    check_registered(spark, name, SF_SMOKE)

@@ -2,14 +2,11 @@
 
 from bigdata_group4_app_spark.operators import quality
 
-from .conftest import SF_CORRECT, assert_matches_oracle
+from .conftest import SF_CORRECT, check_registered
 
 
 def test_dq_oracle_parity(spark):
-    df = quality.dq_rule_violations(spark, SF_CORRECT)
-    assert_matches_oracle(
-        df, quality.ORACLE["dq_rule_violations"], SF_CORRECT
-    )
+    check_registered(spark, "dq_rule_violations", SF_CORRECT)
 
 
 def test_dq_rules_discriminate(spark):

@@ -4,13 +4,12 @@ import pytest
 
 from bigdata_group4_app_spark.operators import relational
 
-from .conftest import SF_CORRECT, assert_matches_oracle
+from .conftest import SF_CORRECT, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(relational.QUERIES))
 def test_oracle_parity(spark, name):
-    df = relational.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, relational.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_broadcast_in_plan(spark):

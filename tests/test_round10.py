@@ -7,7 +7,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle, jobs_during
+from .conftest import (
+    SF_CORRECT,
+    SF_SMOKE,
+    assert_matches_oracle,
+    check_registered,
+    jobs_during,
+)
 
 
 class TestRaConstructionIsLazy:
@@ -189,12 +195,8 @@ class TestNtileFamilyConversionParity:
         ["brier_decomposition", "cumulative_gains_churn"],
     )
     def test_oracle_parity_both_sfs(self, spark, name):
-        from bigdata_group4_app_spark.ml import scoring
-
         for sf in (SF_SMOKE, SF_CORRECT):
-            assert_matches_oracle(
-                scoring.QUERIES[name](spark, sf), scoring.ORACLE[name], sf
-            )
+            check_registered(spark, name, sf)
 
 
 class TestVerdictFreshnessTool:
@@ -300,13 +302,7 @@ class TestCorpusSnapshotDiff:
     built on the checksum machinery."""
 
     def test_oracle_parity_second_sf(self, spark):
-        from bigdata_group4_app_spark.operators import advanced
-
-        assert_matches_oracle(
-            advanced.corpus_snapshot_diff(spark, SF_SMOKE),
-            advanced.ORACLE["corpus_snapshot_diff"],
-            SF_SMOKE,
-        )
+        check_registered(spark, "corpus_snapshot_diff", SF_SMOKE)
 
     def test_counts_match_simulation_identities(self, spark):
         """The per-bucket counts must reconcile with the deterministic
@@ -542,10 +538,4 @@ class TestEpochShufflePackGuard:
             df.collect()
 
     def test_valid_doc_ids_still_match_oracle(self, spark):
-        from bigdata_group4_app_spark.operators import corpus
-
-        assert_matches_oracle(
-            corpus.epoch_shuffle_manifest(spark, SF_SMOKE),
-            corpus.ORACLE["epoch_shuffle_manifest"],
-            SF_SMOKE,
-        )
+        check_registered(spark, "epoch_shuffle_manifest", SF_SMOKE)

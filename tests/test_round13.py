@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import bigdata_group4_app_spark.operators.snapshots as S
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 def _mk_catalog(spark, d: str, rows, name="base") -> int:
@@ -499,13 +499,7 @@ class TestWideSimHash:
                 assert (r["doc_id_1"], r["doc_id_2"]) in narrow_pairs
 
     def test_oracle_match(self, spark):
-        from bigdata_group4_app_spark.operators import dedup
-
-        assert_matches_oracle(
-            dedup.simhash_wide_pairs(spark, SF_CORRECT),
-            dedup.ORACLE["simhash_wide_pairs"],
-            SF_CORRECT,
-        )
+        check_registered(spark, "simhash_wide_pairs", SF_CORRECT)
 
 
 class TestBranchRefs:

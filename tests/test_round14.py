@@ -1,5 +1,6 @@
-"""Round-14 focused tests: the convergence-fold helper and the loop
-rewrites that use it.
+"""Iterative-loop family tests (``functions/iterative.py``): the
+convergence-fold helper, the scoped loop width, and the loop rewrites
+that use them.
 
 The optimization claim (OPTIMIZATION_r14.md §1) is that observing the
 convergence aggregates during the eager localCheckpoint's own job is

@@ -16,19 +16,12 @@ import math
 import pandas as pd
 import pytest
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
-# Round-11 consolidation (VERDICT r10 item 7): this list used to
-# re-run oracle parity for 28 round-4 names, 25 of which are ALREADY
-# swept by the per-module family parametrizations (test_stats,
-# test_corpus, test_llm_pipeline, test_sketches, test_sql_surface,
-# test_relational, test_advanced) at the same SF — pure duplication,
-# pruned. What remains: the three names whose modules have NO full
-# family sweep (graph/quality/windows run targeted tests instead), and
-# ips_policy_value — test_advanced's sweep runs at SF_SMOKE, so this is
-# its only sf0.01 parity (review r11: the original prune wrongly
-# assumed every family sweep ran at SF_CORRECT).
+# The round-4 names no family sweep checks at sf0.01 (graph, quality and
+# windows have no family sweep; test_advanced's runs at sf0.001), as
+# (module, name); the module only labels the test id.
 ORACLE_CHECKED = [
     ("windows", "watermark_dedup_stats"),
     ("graph", "degree_distribution_stats"),
@@ -37,24 +30,11 @@ ORACLE_CHECKED = [
 ]
 
 
-def _module(name):
-    if name == "windows":
-        from bigdata_group4_app_spark.streaming import windows as m
-    else:
-        import importlib
-
-        m = importlib.import_module(
-            f"bigdata_group4_app_spark.operators.{name}"
-        )
-    return m
-
-
-@pytest.mark.parametrize("mod,name", ORACLE_CHECKED)
-def test_round4_matches_oracle(spark, mod, name):
-    m = _module(mod)
-    assert_matches_oracle(
-        m.QUERIES[name](spark, SF_CORRECT), m.ORACLE[name], SF_CORRECT
-    )
+@pytest.mark.parametrize(
+    "name", [pytest.param(n, id=f"{m}-{n}") for m, n in ORACLE_CHECKED]
+)
+def test_round4_matches_oracle(spark, name):
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_winnowing_replay_and_guarantee(spark):

@@ -14,6 +14,8 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from .conftest import SF_CORRECT
+
 
 def test_bpe_oracle_carries_vocab_past_merge_exhaustion(monkeypatch):
     """A corpus whose only word is 'ab' exhausts BPE after ONE merge;
@@ -73,9 +75,6 @@ def test_semdedup_prefilter_margin_below_rounding_halfwidth():
     boundary = COSINE_DUP_THRESHOLD - 5e-5
     gate = COSINE_DUP_THRESHOLD - 5e-5 - 1e-9
     assert gate < boundary - 1e-10
-
-
-SF_CORRECT = "/root/testdata/sf0.01"
 
 
 def test_ivfpq_recall_floor_vs_brute_force(spark):

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-SF_CORRECT = "/root/testdata/sf0.01"
+from .conftest import SF_CORRECT
 
 
 def _python_survivors(members: dict, quality: dict) -> set:

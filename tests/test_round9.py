@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from bigdata_group4_app_spark.operators import dedup, multimodal
 
-from .conftest import SF_CORRECT, assert_matches_oracle
+from .conftest import SF_CORRECT, check_registered
 
 
 def _plan(df) -> str:
@@ -128,13 +128,8 @@ class TestScaledVariantsRegistered:
         (not the floor 2) — the thresholds genuinely diverge from the
         fixed entry and the oracle must still match: this is the
         second-SF proof of the lever VERDICT asked for."""
-        from bigdata_group4_app_spark.operators import graph
-
         sf01 = "/root/testdata/sf0.1"
-        df = graph.ra_link_prediction_scaled(spark, sf01)
-        assert_matches_oracle(
-            df, graph.ORACLE["ra_link_prediction_scaled"], sf01
-        )
+        check_registered(spark, "ra_link_prediction_scaled", sf01)
 
 
 class TestDistributedEquidepth:
@@ -191,12 +186,9 @@ def test_r8_tpch_oracle_parity_second_sf(spark, name):
     SF so threshold-constant fragility (TCLOSE_MAX_BP-class bugs, share
     cutoffs that only hold at one row count) surfaces here before the
     driver sees it."""
-    from bigdata_group4_app_spark.operators import relational
-
     from .conftest import SF_SMOKE
 
-    df = relational.QUERIES[name](spark, SF_SMOKE)
-    assert_matches_oracle(df, relational.ORACLE[name], SF_SMOKE)
+    check_registered(spark, name, SF_SMOKE)
 
 
 class TestStreamingMinhashIndex:
@@ -309,14 +301,9 @@ class TestStreamingMinhashIndex:
 
 class TestRound9NewOps:
     def test_range_audit_oracle_parity_second_sf(self, spark):
-        from bigdata_group4_app_spark.operators import layout
-
         from .conftest import SF_SMOKE
 
-        df = layout.range_partition_balance_audit(spark, SF_SMOKE)
-        assert_matches_oracle(
-            df, layout.ORACLE["range_partition_balance_audit"], SF_SMOKE
-        )
+        check_registered(spark, "range_partition_balance_audit", SF_SMOKE)
 
     def test_range_audit_partitions_cover_all_rows(self, spark):
         """The range assignment is a partition of the fact: row counts

@@ -7,13 +7,12 @@ from pyspark.sql import functions as F
 from bigdata_group4_app_spark.ml import preprocess, scoring
 from bigdata_group4_app_spark.plans.churn import churn_customers
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(scoring.QUERIES))
 def test_oracle_parity(spark, name):
-    df = scoring.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, scoring.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_pandas_udf_matches_expression_tier(spark):

@@ -9,13 +9,12 @@ import pytest
 
 from bigdata_group4_app_spark.operators import sketches
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(sketches.QUERIES))
 def test_sketch_oracle_parity(spark, name):
-    df = sketches.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, sketches.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_kmv_error_within_bound(spark):

@@ -4,11 +4,19 @@ forms (they compile to the same Catalyst plans)."""
 
 from __future__ import annotations
 
+import pytest
+
+from bigdata_group4_app_spark.operators import sql_surface
 from bigdata_group4_app_spark.operators.relational import revenue_by_region
 from bigdata_group4_app_spark.plans.churn import churn_select_sql
 from bigdata_group4_app_spark.sources.registry import SCHEMAS, load_table
 
-from .conftest import SF_SMOKE
+from .conftest import (
+    SF_CORRECT,
+    SF_SMOKE,
+    assert_matches_oracle,
+    check_registered,
+)
 
 
 def _register_views(spark):
@@ -97,11 +105,7 @@ def test_queries_self_heal_on_foreign_session_conf(spark):
     inside every load_table) must repair semantics-bearing confs — pin it
     by skewing the session timezone and checking a timestamp-sensitive
     query still matches its oracle."""
-    import importlib
-
     from bigdata_group4_app_spark.operators import relational
-
-    from .conftest import SF_CORRECT, assert_matches_oracle
 
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
@@ -115,17 +119,9 @@ def test_queries_self_heal_on_foreign_session_conf(spark):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
-import pytest  # noqa: E402
-
-from bigdata_group4_app_spark.operators import sql_surface  # noqa: E402
-
-from .conftest import SF_CORRECT, assert_matches_oracle  # noqa: E402
-
-
 @pytest.mark.parametrize("name", sorted(sql_surface.QUERIES))
 def test_modern_sql_oracle_parity(spark, name):
-    df = sql_surface.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, sql_surface.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_recursive_projection_replay(spark):

@@ -10,13 +10,12 @@ import pytest
 from bigdata_group4_app_spark.operators import stats
 from bigdata_group4_app_spark.plans.churn import churn_customers
 
-from .conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle
+from .conftest import SF_CORRECT, SF_SMOKE, check_registered
 
 
 @pytest.mark.parametrize("name", sorted(stats.QUERIES))
 def test_stats_oracle_parity(spark, name):
-    df = stats.QUERIES[name](spark, SF_CORRECT)
-    assert_matches_oracle(df, stats.ORACLE[name], SF_CORRECT)
+    check_registered(spark, name, SF_CORRECT)
 
 
 def test_ztest_replay(spark):

@@ -17,9 +17,8 @@ from bigdata_group4_app_spark.streaming import (
     running_user_totals,
     stream_events,
 )
-from bigdata_group4_app_spark.streaming.windows import ORACLE
 
-from .conftest import SF_SMOKE, assert_matches_oracle
+from .conftest import SF_SMOKE, check_registered
 
 
 @pytest.fixture()
@@ -97,9 +96,7 @@ def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
 
 
 def test_event_sessions_oracle(spark):
-    assert_matches_oracle(
-        event_sessions(spark, SF_SMOKE), ORACLE["event_sessions"], SF_SMOKE
-    )
+    check_registered(spark, "event_sessions", SF_SMOKE)
 
 
 def test_session_stream_emits_closed_batch_sessions(spark, events_dir):
@@ -452,15 +449,7 @@ def test_streaming_ses_matches_sequential_fold(spark, tmp_path):
 
 
 def test_peak_concurrency_oracle(spark):
-    from bigdata_group4_app_spark.streaming.windows import (
-        peak_concurrent_sessions,
-    )
-
-    assert_matches_oracle(
-        peak_concurrent_sessions(spark, SF_SMOKE),
-        ORACLE["peak_concurrent_sessions"],
-        SF_SMOKE,
-    )
+    check_registered(spark, "peak_concurrent_sessions", SF_SMOKE)
 
 
 def test_peak_concurrency_matches_naive_sweep(spark):
@@ -569,15 +558,7 @@ def test_transform_with_state_topk(spark, tmp_path):
 
 
 def test_session_path_trigrams_oracle(spark):
-    from bigdata_group4_app_spark.streaming.windows import (
-        session_path_trigrams,
-    )
-
-    assert_matches_oracle(
-        session_path_trigrams(spark, SF_SMOKE),
-        ORACLE["session_path_trigrams"],
-        SF_SMOKE,
-    )
+    check_registered(spark, "session_path_trigrams", SF_SMOKE)
 
 
 def test_session_path_trigrams_replay(spark):
@@ -659,11 +640,7 @@ def test_watermark_sizing_oracle_and_detection(spark, tmp_path):
         watermark_sizing_stats,
     )
 
-    assert_matches_oracle(
-        watermark_sizing_stats(spark, SF_SMOKE),
-        ORACLE["watermark_sizing_stats"],
-        SF_SMOKE,
-    )
+    check_registered(spark, "watermark_sizing_stats", SF_SMOKE)
     row = watermark_sizing_stats(spark, SF_SMOKE).collect()[0]
     assert row["n_late"] == 0  # driver feed is genuinely in-order
 
