@@ -2,8 +2,10 @@
 many-table corpus store (VERDICT r10 item 8), plus the closed lineage
 loop: snapshot diff over two REAL committed versions (item 4).
 
-The catalog generalizes the streaming segment store's version/manifest
-protocol (``streaming/sinks.py``) from one table to N:
+The catalog is the pipeline's transactional store for N tables; the
+streaming catalog writer and the CDC sink (``streaming/sinks.py``)
+commit through it (only the MinHash index keeps its own ``v{n}`` +
+``_SUCCESS`` segment protocol):
 
 - data lives in immutable SEGMENT files under
   ``{catalog}/segments/{table}/{name}`` — a segment is written once and
@@ -210,6 +212,26 @@ def commit_snapshot(
 class CommitConflict(Exception):
     """Another writer advanced the catalog past the snapshot this
     writer's table lists were computed from."""
+
+
+_COMMIT_ATTEMPTS = 20
+
+
+def _retry_on_conflict(attempt, what: str):
+    """The one optimistic recompute loop of every catalog writer: run
+    ``attempt()`` (read the head, recompute, commit) until it returns
+    without :class:`CommitConflict`. A writer that loses
+    ``_COMMIT_ATTEMPTS`` races in a row is starved and should back off,
+    not spin: raise, naming ``what`` and the last conflict."""
+    last: CommitConflict | None = None
+    for _ in range(_COMMIT_ATTEMPTS):
+        try:
+            return attempt()
+        except CommitConflict as e:
+            last = e  # the head moved: recompute from the new one
+    raise CommitConflict(
+        f"{what} lost {_COMMIT_ATTEMPTS} consecutive commit races: {last}"
+    )
 
 
 def commit_snapshot_if(
@@ -432,30 +454,14 @@ def read_snapshot_table(
     #
     # HINT CONTRACT (ADVICE r13): the hint is trusted, not validated —
     # it must be the DDL the writer of these segments used (the fixture
-    # readers pass the registry's _*_SCHEMA_V1 constants, pinned by the
-    # round-12/13 suites). A stale hint on a legacy/evolved snapshot
-    # would silently project wrong columns, so hint-passing callers must
-    # either own the write path or read snapshots whose manifests commit
-    # a schema (which then wins). Debug runs can opt into a one-footer
-    # cross-check: SPARK_GRAFT_VALIDATE_SCHEMA_HINTS=1.
+    # readers pass the registry's _*_SCHEMA_V1 constants). A stale hint
+    # on a legacy/evolved snapshot would silently project wrong columns,
+    # so hint-passing callers must either own the write path or read
+    # snapshots whose manifests commit a schema (which then wins).
+    # tests/test_round12.py pins every hinted fixture read: the hint's
+    # columns equal each segment footer's, both ways.
     ddl = m.get("schemas", {}).get(table) or schema
-    if (
-        schema is not None
-        and ddl is schema
-        and m["tables"][table]
-        and os.environ.get("SPARK_GRAFT_VALIDATE_SCHEMA_HINTS") == "1"
-    ):
-        probe = spark.read.parquet(
-            os.path.join(catalog_dir, m["tables"][table][0])
-        )
-        hinted = {f.name for f in spark.createDataFrame([], schema).schema}
-        missing = set(probe.columns) - hinted
-        assert not missing, (
-            f"schema hint for {table!r} drops columns {sorted(missing)} "
-            f"present in segment {m['tables'][table][0]!r}"
-        )
-    paths = [os.path.join(catalog_dir, p) for p in m["tables"][table]]
-    if not paths:
+    if not m["tables"][table]:
         if ddl is not None:
             return spark.createDataFrame([], ddl)
         raise ValueError(
@@ -464,14 +470,29 @@ def read_snapshot_table(
             "schema (commit_snapshot(..., schemas=...)) to make empty "
             "reads well-typed"
         )
-    reader = spark.read.schema(ddl) if ddl is not None else spark.read
-    out = reader.parquet(*paths)
     entries = m.get("deletes", {}).get(table, [])
-    # POSITION deletes (round 13, Iceberg-v2's second delete flavor):
-    # entries with kind="position" hold (file_name, row_index) rows.
-    # The scan's _metadata column provides both per data row — it must
-    # be materialized DIRECTLY on the file scan (joins drop it), so do
-    # it first, run every anti-join, then project the helpers away.
+    return _scan_segments(spark, catalog_dir, m["tables"][table], ddl, entries)
+
+
+def _scan_segments(
+    spark: SparkSession,
+    catalog_dir: str,
+    rels: list[str],
+    ddl: str | None,
+    entries: list[dict],
+) -> DataFrame:
+    """The one delete-aware segment scan: the union of the segments
+    ``rels`` (through ``ddl`` when given) minus every row the table's
+    MOR delete ``entries`` remove. The snapshot read, both compactions
+    and the COW rewrite all scan here, so no rewrite can resurrect a
+    deleted row. Equality entries anti-join on their ``col``; POSITION
+    entries (round 13, ``kind="position"``) hold (file_name, row_index)
+    rows, matched against the scan's _metadata — materialized DIRECTLY
+    on the file scan (joins drop it), then projected away after every
+    anti-join. Rewritten rows land in new part files, so position
+    entries naming the old files become no-ops for them."""
+    reader = spark.read.schema(ddl) if ddl is not None else spark.read
+    out = reader.parquet(*[os.path.join(catalog_dir, p) for p in rels])
     pos_entries = [e for e in entries if e.get("kind") == "position"]
     if pos_entries:
         data_cols = out.columns
@@ -542,7 +563,6 @@ def compact_table(
     catalog_dir: str,
     table: str,
     name: str,
-    max_remerge: int = 20,
 ) -> int:
     """Rewrite a table's current segment list into ONE segment and
     commit a new snapshot where that table points at the compacted
@@ -556,42 +576,34 @@ def compact_table(
     table's writer, a stats-only commit) is rebased over automatically;
     an interleaved commit that changed this table's list (a concurrent
     ingest appended a segment the merge didn't include) makes the
-    replace non-commuting — the loop then RE-MERGES from the new head
-    and retries, so routine ingest-plus-compaction concurrency never
-    surfaces a manual-retry error and never loses a segment. After
-    ``max_remerge`` lost races it raises (a maintenance job perpetually
-    starved by ingest should back off, not spin). Zone-map stats for
-    the OTHER tables carry over verbatim; the compacted table's old
-    per-segment stats are dropped (they describe retired segments —
-    recompute and pass through a future stats-aware rewrite if the
-    merged segment needs bounds). MOR delete files for this table are
-    FOLDED IN (round 13): the merge reads through
-    :func:`read_snapshot_table`, which applies them, and the rebase's
-    replace rule retires the table's delete entries from the new
-    manifest — compaction is what keeps the reader's anti-join stack
-    from growing without bound."""
-    last: CommitConflict | None = None
-    for _ in range(max_remerge):
-        ids = committed_snapshot_ids(catalog_dir)
-        head = read_manifest(catalog_dir, ids[-1])
-        merged = read_snapshot_table(spark, catalog_dir, table, head["id"])
+    replace non-commuting — :func:`_retry_on_conflict` then RE-MERGES
+    from the new head and retries, so routine ingest-plus-compaction
+    concurrency never surfaces a manual-retry error and never loses a
+    segment. Zone-map stats for the OTHER tables carry over verbatim;
+    the compacted table's old per-segment stats are dropped (they
+    describe retired segments — recompute and pass through a future
+    stats-aware rewrite if the merged segment needs bounds). MOR delete
+    files for this table are FOLDED IN (round 13): the merge reads
+    through :func:`read_snapshot_table`, which applies them, and the
+    rebase's replace rule retires the table's delete entries from the
+    new manifest — compaction is what keeps the reader's anti-join
+    stack from growing without bound."""
+
+    def attempt() -> int:
+        head_id = committed_snapshot_ids(catalog_dir)[-1]
+        merged = read_snapshot_table(spark, catalog_dir, table, head_id)
         rel = write_segment(merged, catalog_dir, table, name)
-        try:
-            return commit_snapshot_rebase(
-                catalog_dir,
-                replaces={table: [rel]},
-                base_head=head["id"],
-                # schemas carry over (inside the rebase) — the
-                # compaction read projects through the head schema, so
-                # the merged segment MATERIALIZES any evolved columns
-                # (NULL-backfilled) and stays schema-true
-            )
-        except CommitConflict as e:
-            last = e  # this table's list moved: re-merge from new head
-    raise CommitConflict(
-        f"compaction of {table!r} lost {max_remerge} consecutive "
-        f"commit races: {last}"
-    )
+        return commit_snapshot_rebase(
+            catalog_dir,
+            replaces={table: [rel]},
+            base_head=head_id,
+            # schemas carry over (inside the rebase) — the compaction
+            # read projects through the head schema, so the merged
+            # segment MATERIALIZES any evolved columns (NULL-backfilled)
+            # and stays schema-true
+        )
+
+    return _retry_on_conflict(attempt, f"compaction of {table!r}")
 
 
 def _segment_bytes(catalog_dir: str, rel: str) -> int:
@@ -614,7 +626,6 @@ def compact_table_binpack(
     table: str,
     name: str,
     small_bytes: int,
-    max_remerge: int = 20,
 ) -> int | None:
     """PARTIAL compaction — Iceberg's ``rewrite_data_files`` binpack
     strategy: merge only the segments smaller than ``small_bytes``
@@ -626,15 +637,16 @@ def compact_table_binpack(
     when fewer than two small segments exist (nothing to pack — an
     empty rewrite would churn the manifest for no I/O win).
 
-    MOR delete files are applied to the REWRITTEN rows but kept in the
-    manifest: they may still reference rows in the untouched segments
-    (the Iceberg rule — a delete file drops only when every data file
-    it could cover was rewritten; here that is
-    :func:`compact_table`'s job). Keys that pointed into rewritten
-    segments become no-op anti-join entries until then. Commits
-    through the same re-merge rebase loop as the full compaction."""
-    last: CommitConflict | None = None
-    for _ in range(max_remerge):
+    MOR delete files (equality AND position) are applied to the
+    REWRITTEN rows by :func:`_scan_segments` but kept in the manifest:
+    they may still reference rows in the untouched segments (the
+    Iceberg rule — a delete file drops only when every data file it
+    could cover was rewritten; here that is :func:`compact_table`'s
+    job). Entries that pointed into rewritten segments become no-op
+    anti-join entries until then. Commits through the same re-merge
+    loop as the full compaction."""
+
+    def attempt() -> int | None:
         ids = committed_snapshot_ids(catalog_dir)
         head = read_manifest(catalog_dir, ids[-1])
         segs = head["tables"][table]
@@ -644,47 +656,27 @@ def compact_table_binpack(
         if len(small) < 2:
             return None
         keep = [r for r in segs if r not in set(small)]
+        entries = head.get("deletes", {}).get(table, [])
         ddl = head.get("schemas", {}).get(table)
-        reader = spark.read.schema(ddl) if ddl is not None else spark.read
-        merged = reader.parquet(
-            *[os.path.join(catalog_dir, r) for r in small]
-        )
-        for e in head.get("deletes", {}).get(table, []):
-            keys = spark.read.parquet(
-                os.path.join(catalog_dir, e["path"])
-            ).select(F.col(e["col"]).alias("__del_key"))
-            merged = merged.join(
-                F.broadcast(keys),
-                merged[e["col"]] == keys["__del_key"],
-                "left_anti",
-            )
+        merged = _scan_segments(spark, catalog_dir, small, ddl, entries)
         rel = write_segment(merged, catalog_dir, table, name)
         head_stats = head.get("stats", {}).get(table, {})
-        try:
-            return commit_snapshot_rebase(
-                catalog_dir,
-                replaces={table: keep + [rel]},
-                base_head=head["id"],
-                # the rebase's replace retires the table's stats and
-                # deletes wholesale; re-supply the UNTOUCHED segments'
-                # stats (their zone maps / blooms are still true) and
-                # every delete entry (untouched segments may still hold
-                # rows the files delete)
-                stats={
-                    table: {
-                        r: head_stats[r] for r in keep if r in head_stats
-                    }
-                },
-                delete_appends={
-                    table: list(head.get("deletes", {}).get(table, []))
-                },
-            )
-        except CommitConflict as e:
-            last = e  # the table's list moved: re-select from new head
-    raise CommitConflict(
-        f"binpack of {table!r} lost {max_remerge} consecutive "
-        f"commit races: {last}"
-    )
+        return commit_snapshot_rebase(
+            catalog_dir,
+            replaces={table: keep + [rel]},
+            base_head=head["id"],
+            # the rebase's replace retires the table's stats and
+            # deletes wholesale; re-supply the UNTOUCHED segments'
+            # stats (their zone maps / blooms are still true) and
+            # every delete entry (untouched segments may still hold
+            # rows the files delete)
+            stats={
+                table: {r: head_stats[r] for r in keep if r in head_stats}
+            },
+            delete_appends={table: list(entries)},
+        )
+
+    return _retry_on_conflict(attempt, f"binpack of {table!r}")
 
 
 def cow_delete_range(
@@ -703,12 +695,14 @@ def cow_delete_range(
     without rewriting the corpus. Blast radius is zone-map bounded —
     :func:`prune_segments_by_range` picks the segments whose committed
     bounds OVERLAP the range (every other segment is kept BY REFERENCE,
-    zero I/O); the survivors of the affected segments are rewritten
-    into one new segment with freshly measured bounds, and the delete
-    commits CONDITIONALLY on the head it read (a concurrent writer
-    raises :class:`CommitConflict`, never a lost update). Rows with a
-    NULL ``col`` always survive (a takedown predicate can only remove
-    what it can prove in range). If the affected segments have no
+    zero I/O); the survivors of the affected segments — read through
+    :func:`_scan_segments`, so live MOR delete entries stay applied —
+    are rewritten into one new segment with freshly measured bounds,
+    and the delete commits CONDITIONALLY on the head it read (a
+    concurrent writer raises :class:`CommitConflict`, never a lost
+    update). Rows with a NULL ``col`` always survive (a takedown
+    predicate can only remove what it can prove in range). If the
+    affected segments have no
     survivors the table simply lists fewer segments — readers handle
     an empty list through the committed schema. Pinned readers of
     pre-delete snapshots still see the removed rows until those
@@ -743,12 +737,12 @@ def cow_delete_range(
         tstats.pop(p, None)  # bounds of retired segments
     keep = [p for p in tables[table] if p not in set(affected)]
     surv = (
-        spark.read.parquet(
-            *[os.path.join(catalog_dir, p) for p in affected]
+        _scan_segments(
+            spark, catalog_dir, affected,
+            head.get("schemas", {}).get(table),
+            head.get("deletes", {}).get(table, []),
         )
-        .filter(
-            F.col(col).isNull() | ~F.col(col).between(lo, hi)
-        )
+        .filter(F.col(col).isNull() | ~F.col(col).between(lo, hi))
         .persist()
     )
     agg = surv.agg(
@@ -778,9 +772,9 @@ def cow_delete_range(
         expected_head=head["id"],
         stats=stats,
         schemas=head.get("schemas", {}),
-        # NOTE: the COW rewrite scans the affected segments RAW (not
-        # through read_snapshot_table), so any live MOR delete files
-        # still apply to the rewritten rows — carry them forward
+        # the rewrite already excludes MOR-deleted rows (it scanned
+        # through _scan_segments); the entries carry forward because
+        # the KEPT segments still need them
         deletes=head.get("deletes", {}),
         committed_at=committed_at,
     )
@@ -928,9 +922,10 @@ def rollback_snapshot(catalog_dir: str, to_id: int) -> int:
 # pre-ref catalogs keep their semantics unchanged.
 
 
-class RefConflict(Exception):
+class RefConflict(CommitConflict):
     """The ref moved (or already exists) relative to what this writer
-    read — re-read, re-validate, retry."""
+    read — re-read, re-validate, retry: :class:`CommitConflict` at
+    branch granularity, so :func:`_retry_on_conflict` retries it too."""
 
 
 def _ref_dir(catalog_dir: str, name: str) -> str:
@@ -1589,17 +1584,24 @@ def ensure_fixture_catalog(spark: SparkSession, sf_dir: str) -> str:
     / driver reality). Production writers never share segment names, so
     the catalog protocol itself has no such window."""
     d = _fixture_dir(sf_dir)
+    # each builder is gated on its own snapshot, so a catalog from an
+    # earlier session's build is extended IN PLACE with what is absent
+    _ensure_base_snapshots(spark, sf_dir, d)
+    _ensure_schema_evolution_snapshot(spark, sf_dir, d)
+    _ensure_takedown_snapshot(spark, d)
+    _ensure_bloom_stats_snapshot(spark, sf_dir, d)
+    _ensure_mor_delete_snapshot(spark, sf_dir, d)
+    _ensure_bloom_sidecar_snapshot(d)
+    return d
+
+
+def _ensure_base_snapshots(spark: SparkSession, sf_dir: str, d: str) -> None:
+    """Idempotently commit snapshots A and B (see
+    :func:`ensure_fixture_catalog`); runs only while either is absent."""
     if os.path.exists(_snap_path(d, SNAP_A_ID)) and os.path.exists(
         _snap_path(d, SNAP_B_ID)
     ):
-        # snapshots 0/1 present (possibly from an earlier session's
-        # build): extend IN PLACE with the later snapshots if absent
-        _ensure_schema_evolution_snapshot(spark, sf_dir, d)
-        _ensure_takedown_snapshot(spark, d)
-        _ensure_bloom_stats_snapshot(spark, sf_dir, d)
-        _ensure_mor_delete_snapshot(spark, sf_dir, d)
-        _ensure_bloom_sidecar_snapshot(d)
-        return d
+        return
     snap_a, snap_b, emb = _fixture_frames(spark, sf_dir)
     seg = F.pmod(F.col("doc_id"), F.lit(_DOC_SEG_BUCKETS)).alias("seg")
 
@@ -1677,12 +1679,6 @@ def ensure_fixture_catalog(spark: SparkSession, sf_dir: str) -> str:
         stats={"embeddings": emb_stats},
         committed_at=fixture_ts(SNAP_B_ID),
     )
-    _ensure_schema_evolution_snapshot(spark, sf_dir, d)
-    _ensure_takedown_snapshot(spark, d)
-    _ensure_bloom_stats_snapshot(spark, sf_dir, d)
-    _ensure_mor_delete_snapshot(spark, sf_dir, d)
-    _ensure_bloom_sidecar_snapshot(d)
-    return d
 
 
 def _ensure_schema_evolution_snapshot(
@@ -2339,21 +2335,11 @@ def catalog_bloom_sidecar_lookup(
         d, SNAP_G_ID, "documents", "doc_id", BLOOM_PROBE_KEYS
     )
     if paths:
-        scan = spark.read.schema(_DOC_SCHEMA_V1).parquet(
-            *[os.path.join(d, p) for p in paths]
-        )
+        entries = mg.get("deletes", {}).get("documents", [])
+        scan = _scan_segments(spark, d, paths, _DOC_SCHEMA_V1, entries)
     else:
         scan = spark.createDataFrame([], _DOC_SCHEMA_V1)
     flt = scan.filter(F.col("doc_id").isin(BLOOM_PROBE_KEYS))
-    for e in mg.get("deletes", {}).get("documents", []):
-        keys = spark.read.parquet(os.path.join(d, e["path"])).select(
-            F.col(e["col"]).alias("__del_key")
-        )
-        flt = flt.join(
-            F.broadcast(keys),
-            flt[e["col"]] == keys["__del_key"],
-            "left_anti",
-        )
     return flt.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.coalesce(

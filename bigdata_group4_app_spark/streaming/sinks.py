@@ -48,9 +48,10 @@ def start_dedup_append_sink(
 
 
 def _committed_versions(state_dir: str) -> list[int]:
-    """All committed versions under ``state_dir``, ascending. A version
-    is committed iff its version-level _SUCCESS marker exists: a crash
-    mid-write leaves a marker-less directory that readers ignore.
+    """All committed MinHash index versions under ``state_dir``,
+    ascending. A version is committed iff its version-level _SUCCESS
+    marker exists: a crash mid-write leaves a marker-less directory
+    that readers ignore.
     Local-FS pointer logic; on a real lake this whole versioning concern
     is what a Delta/Iceberg transactional commit replaces."""
     import os
@@ -66,19 +67,21 @@ def _committed_versions(state_dir: str) -> list[int]:
     )
 
 
-def _latest_state_version(state_dir: str) -> int | None:
-    """Highest committed CDC state version (an uncommitted one is
-    overwritten on replay), or None before the first commit."""
-    committed = _committed_versions(state_dir)
-    return committed[-1] if committed else None
+_CDC_TABLE = "cdc_state"
 
 
 def read_cdc_state(spark, state_dir: str) -> DataFrame | None:
-    """The current compacted CDC state, or None before the first commit."""
-    v = _latest_state_version(state_dir)
-    if v is None:
+    """The current compacted CDC state — table ``cdc_state`` of the
+    snapshot catalog at ``state_dir`` — or None before the first commit."""
+    from ..operators.snapshots import (
+        committed_snapshot_ids,
+        read_snapshot_table,
+    )
+
+    ids = committed_snapshot_ids(state_dir)
+    if not ids:
         return None
-    return spark.read.parquet(f"{state_dir}/v{v}")
+    return read_snapshot_table(spark, state_dir, _CDC_TABLE, ids[-1])
 
 
 def merge_cdc_state(batch_df: DataFrame, state_dir: str) -> None:
@@ -96,14 +99,29 @@ def merge_cdc_state(batch_df: DataFrame, state_dir: str) -> None:
     would resurrect the key — the standard retention trade; keep a
     tombstone log with a TTL where that matters.
 
-    State is written to a NEW versioned subdirectory (v0, v1, ...) and
-    readers follow the highest _SUCCESS-committed version — a crash
-    mid-write can never destroy the previous state the way an in-place
-    mode('overwrite') could (delete-then-fail leaves nothing); replay
-    just rewrites the uncommitted version. The prior version is pruned
-    only after the new one commits."""
+    State lives in a snapshot catalog (``operators/snapshots.py``): the
+    merged state is written as the single segment of table
+    ``cdc_state``, named after the NEXT snapshot id, and becomes visible
+    only with the conditional manifest commit against the head this
+    step read — a crash mid-write can never destroy the previous state
+    the way an in-place mode('overwrite') could, and the replay
+    rewrites its own orphan segment. The committed DDL keeps an
+    all-tombstone (empty) state well-typed. After the commit the head
+    and its predecessor are retained (``expire_snapshots`` +
+    ``vacuum_catalog``). One writer per ``state_dir``: the streaming
+    driver serializes ``foreachBatch``."""
+    from ..operators.snapshots import (
+        commit_snapshot_if,
+        committed_snapshot_ids,
+        expire_snapshots,
+        read_snapshot_table,
+        vacuum_catalog,
+        write_segment,
+    )
+
     spark = batch_df.sparkSession
-    cur = _latest_state_version(state_dir)
+    ids = committed_snapshot_ids(state_dir)
+    head = ids[-1] if ids else None
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     latest = (
         batch_df.withColumn("rn", F.row_number().over(w))
@@ -116,10 +134,10 @@ def merge_cdc_state(batch_df: DataFrame, state_dir: str) -> None:
             F.col("event_id").alias("last_event_id"),
         )
     )
-    state = None if cur is None else spark.read.parquet(f"{state_dir}/v{cur}")
-    if state is None:
+    if head is None:
         merged = latest
     else:
+        state = read_snapshot_table(spark, state_dir, _CDC_TABLE, head)
         s = state.select(*(F.col(c).alias(f"s_{c}") for c in state.columns))
         j = latest.join(s, latest.user_id == s.s_user_id, "full_outer")
         batch_wins = F.col("user_id").isNotNull() & (
@@ -145,14 +163,16 @@ def merge_cdc_state(batch_df: DataFrame, state_dir: str) -> None:
             ),
         )
     merged = merged.filter(F.col("last_type") != "error").localCheckpoint()
-    nxt = 0 if cur is None else cur + 1
-    merged.write.mode("overwrite").parquet(f"{state_dir}/v{nxt}")
-    if cur is not None and cur >= 1:
-        # prune versions older than the one we just superseded
-        import shutil
-
-        for old in range(cur):
-            shutil.rmtree(f"{state_dir}/v{old}", ignore_errors=True)
+    nxt = 0 if head is None else head + 1
+    rel = write_segment(merged, state_dir, _CDC_TABLE, f"state-{nxt:06d}")
+    commit_snapshot_if(
+        state_dir,
+        {_CDC_TABLE: [rel]},
+        expected_head=head,
+        schemas={_CDC_TABLE: merged.schema.toDDL()},
+    )
+    expire_snapshots(state_dir, keep_last=2)
+    vacuum_catalog(state_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -550,49 +570,69 @@ def catalog_commit_step(batch_df: DataFrame, catalog_dir: str) -> int | None:
     exactly-once), re-derive stats, retry. Bounded, then re-raises.
 
     Returns the committed snapshot id, or None for a no-op replay."""
-    from ..operators.snapshots import CommitConflict
-
-    last: CommitConflict | None = None
-    for _ in range(20):
-        try:
-            return _catalog_commit_once(batch_df, catalog_dir)
-        except CommitConflict as e:
-            last = e  # non-commuting interleave: recompute from new head
-    raise CommitConflict(
-        f"catalog sink lost 20 consecutive commit races: {last}"
+    from ..operators.snapshots import (
+        _retry_on_conflict,
+        commit_snapshot_rebase,
+        committed_snapshot_ids,
+        read_manifest,
     )
 
+    def attempt() -> int | None:
+        ids = committed_snapshot_ids(catalog_dir)
+        head = read_manifest(catalog_dir, ids[-1]) if ids else None
+        delta = _batch_delta(batch_df, catalog_dir, head)
+        if delta is None:
+            return None  # empty batch / pure replay: no snapshot
+        rel, stats_rel, bounds = delta
+        # REBASING commit: the documents append commutes with any
+        # interleaved maintenance commit (the rebase re-applies it onto
+        # the winner's list); the doc_stats replace commutes iff the
+        # winner left doc_stats untouched — otherwise CommitConflict
+        # reaches the retry loop. Head schemas/stats carry forward
+        # inside the rebase (ADVICE r12), so a sink commit can never
+        # erase an evolved schema or another segment's zone maps.
+        return commit_snapshot_rebase(
+            catalog_dir,
+            appends={"documents": [rel]},
+            replaces={"doc_stats": [stats_rel]},
+            base_head=head["id"] if head else None,
+            stats={"documents": {rel: bounds}},
+        )
 
-def _catalog_commit_once(batch_df: DataFrame, catalog_dir: str) -> int | None:
-    """One attempt of :func:`catalog_commit_step`: anti-join against the
-    CURRENT head's seen set, write segments, commit via the rebase
-    (commuting interleaves absorbed; non-commuting ones raise for the
-    caller's recompute loop)."""
+    return _retry_on_conflict(attempt, "catalog sink")
+
+
+def _batch_delta(
+    batch_df: DataFrame, catalog_dir: str, head: dict | None
+) -> tuple[str, str, dict] | None:
+    """The segments one ingest micro-batch adds on top of ``head`` (a
+    manifest, None for an empty catalog): anti-join the batch against
+    the head's seen set, write the genuinely-new docs as one documents
+    segment and the incremental one-row ``doc_stats`` segment. Returns
+    ``(documents rel, doc_stats rel, the new segment's zone map)``, or
+    None when nothing is new. Both ingest steps commit what this
+    returns, each through its own commit call."""
     import os
 
     from ..operators.snapshots import (
-        commit_snapshot_rebase,
-        committed_snapshot_ids,
         prune_segments_by_range,
-        read_manifest,
         read_snapshot_table,
         write_segment,
     )
 
     spark = batch_df.sparkSession
     docs = batch_df.select("doc_id", "text").dropDuplicates(["doc_id"])
-    ids = committed_snapshot_ids(catalog_dir)
-    head = read_manifest(catalog_dir, ids[-1]) if ids else None
     if head is not None:
         # batch id bounds first (O(batch)), then prune the seen-set
         # read to the committed segments whose manifest zone maps
         # overlap them — the dedup anti-join never opens a segment the
-        # manifest can prove disjoint
+        # manifest can prove disjoint (an empty catalog has no seen set,
+        # so the first batch skips this aggregate)
         b = docs.agg(
             F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
         ).collect()[0]
         if b["lo"] is None:
-            return None  # empty batch: no snapshot
+            return None  # empty batch
         seen_paths = prune_segments_by_range(
             catalog_dir, head["id"], "documents", "doc_id",
             b["lo"], b["hi"],
@@ -613,12 +653,8 @@ def _catalog_commit_once(batch_df: DataFrame, catalog_dir: str) -> int | None:
     ).collect()[0]
     first = agg["m"]
     if first is None:
-        return None  # pure replay: nothing new, no snapshot
+        return None  # pure replay: nothing new
     rel = write_segment(new, catalog_dir, "documents", f"seg-{first}")
-    # zone maps for the dedup prune: this segment's measured (min, max)
-    # from the same batch aggregate; prior segments' bounds carry
-    # forward inside the rebase commit
-    seg_bounds = {"doc_id_min": first, "doc_id_max": agg["mx"]}
     # INCREMENTAL stats: previous 1-row stats segment + the batch delta
     # — O(batch) per step, never an O(corpus) re-aggregation (the same
     # rule that keeps the minhash index segments append-only)
@@ -635,20 +671,9 @@ def _catalog_commit_once(batch_df: DataFrame, catalog_dir: str) -> int | None:
     stats_rel = write_segment(
         stats, catalog_dir, "doc_stats", f"stats-{first}"
     )
-    # REBASING commit: the documents append commutes with any
-    # interleaved maintenance commit (the rebase re-applies it onto the
-    # winner's list); the doc_stats replace commutes iff the winner
-    # left doc_stats untouched — otherwise CommitConflict reaches the
-    # step's recompute loop. Head schemas/stats carry forward inside
-    # the rebase (ADVICE r12), so a sink commit can never erase an
-    # evolved schema or another segment's zone maps.
-    return commit_snapshot_rebase(
-        catalog_dir,
-        appends={"documents": [rel]},
-        replaces={"doc_stats": [stats_rel]},
-        base_head=head["id"] if head else None,
-        stats={"documents": {rel: seg_bounds}},
-    )
+    # zone map for the dedup prune: this segment's measured (min, max)
+    # from the same batch aggregate
+    return rel, stats_rel, {"doc_id_min": first, "doc_id_max": agg["mx"]}
 
 
 class StagingAuditFailure(Exception):
@@ -671,7 +696,7 @@ def catalog_commit_step_staged(
     writer per branch, the streaming reality. Returns the staged
     snapshot id, or None for a no-op replay."""
     from ..operators.snapshots import (
-        RefConflict,
+        _retry_on_conflict,
         commit_to_branch,
         create_ref,
         read_manifest,
@@ -681,93 +706,34 @@ def catalog_commit_step_staged(
 
     if not read_ref(catalog_dir, branch):
         create_ref(catalog_dir, branch, resolve_ref(catalog_dir, "main"))
-    last: RefConflict | None = None
-    for _ in range(5):
+
+    def attempt() -> int | None:
         head = read_manifest(catalog_dir, resolve_ref(catalog_dir, branch))
-        parts = _staged_commit_parts(batch_df, catalog_dir, head)
-        if parts is None:
+        delta = _batch_delta(batch_df, catalog_dir, head)
+        if delta is None:
             return None  # empty batch / pure replay
-        tables, stats, deletes = parts
-        try:
-            return commit_to_branch(
-                catalog_dir,
-                branch,
-                tables,
-                stats=stats,
-                schemas=head.get("schemas", {}),
-                deletes=deletes,
-                expected_sid=head["id"],
-            )
-        except RefConflict as e:
-            last = e  # another stager advanced the branch: recompute
-    raise last
-
-
-def _staged_commit_parts(
-    batch_df: DataFrame, catalog_dir: str, head: dict
-) -> tuple[dict, dict, dict] | None:
-    """Compute the staged commit's (tables, stats, deletes) from the
-    branch head: zone-map-pruned seen-set anti-join, new documents
-    segment, incremental doc_stats rewrite — the
-    :func:`_catalog_commit_once` shape against an explicit head.
-    ``commit_to_branch`` takes FULL lists/stats (no rebase merge), so
-    the head's stats/deletes are carried forward here."""
-    import os
-
-    from ..operators.snapshots import (
-        prune_segments_by_range,
-        read_snapshot_table,
-        write_segment,
-    )
-
-    spark = batch_df.sparkSession
-    docs = batch_df.select("doc_id", "text").dropDuplicates(["doc_id"])
-    b = docs.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).collect()[0]
-    if b["lo"] is None:
-        return None
-    seen_paths = prune_segments_by_range(
-        catalog_dir, head["id"], "documents", "doc_id", b["lo"], b["hi"]
-    )
-    if seen_paths:
-        # explicit 1-column schema: skips the footer-inference job
-        # AND is the projection (round 14)
-        seen = spark.read.schema("doc_id bigint").parquet(
-            *[os.path.join(catalog_dir, p) for p in seen_paths]
+        rel, stats_rel, bounds = delta
+        # commit_to_branch takes FULL lists/stats (no rebase merge), so
+        # the head's lists, stats and deletes are carried forward here
+        tables = {t: list(v) for t, v in head["tables"].items()}
+        tables["documents"] = tables.get("documents", []) + [rel]
+        tables["doc_stats"] = [stats_rel]
+        stats = {t: dict(st) for t, st in head.get("stats", {}).items()}
+        stats.setdefault("documents", {})[rel] = bounds
+        stats.pop("doc_stats", None)  # describes the retired stats segment
+        # a branch that moved raises RefConflict (a CommitConflict):
+        # recompute from its new head
+        return commit_to_branch(
+            catalog_dir,
+            branch,
+            tables,
+            stats=stats,
+            schemas=head.get("schemas", {}),
+            deletes=dict(head.get("deletes", {})),
+            expected_sid=head["id"],
         )
-        docs = docs.join(seen, "doc_id", "left_anti")
-    new = docs.localCheckpoint()
-    agg = new.agg(
-        F.min("doc_id").alias("m"),
-        F.max("doc_id").alias("mx"),
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.length("text")), F.lit(0)).alias("c"),
-    ).collect()[0]
-    if agg["m"] is None:
-        return None
-    rel = write_segment(
-        new, catalog_dir, "documents", f"seg-{agg['m']}"
-    )
-    prev = read_snapshot_table(
-        spark, catalog_dir, "doc_stats", head["id"]
-    ).collect()[0]
-    stats_df = spark.createDataFrame(
-        [(prev["n_docs"] + agg["n"], prev["n_chars"] + agg["c"])],
-        "n_docs long, n_chars long",
-    )
-    stats_rel = write_segment(
-        stats_df, catalog_dir, "doc_stats", f"stats-{agg['m']}"
-    )
-    tables = {t: list(v) for t, v in head["tables"].items()}
-    tables["documents"] = tables.get("documents", []) + [rel]
-    tables["doc_stats"] = [stats_rel]
-    stats = {t: dict(s) for t, s in head.get("stats", {}).items()}
-    stats.setdefault("documents", {})[rel] = {
-        "doc_id_min": agg["m"], "doc_id_max": agg["mx"],
-    }
-    stats.pop("doc_stats", None)  # describes the retired stats segment
-    return tables, stats, dict(head.get("deletes", {}))
+
+    return _retry_on_conflict(attempt, f"staging writer on {branch!r}")
 
 
 def publish_staging(
@@ -843,7 +809,7 @@ def start_cdc_merge_sink(
     """Streaming MERGE INTO: ``foreachBatch`` folds each micro-batch into
     a compacted keyed state table via :func:`merge_cdc_state` — the
     continuous form of the batch ``cdc_apply`` operator. At scale the
-    overwrite becomes a Delta/Iceberg MERGE on the same join; the
+    state rewrite becomes a Delta/Iceberg MERGE on the same join; the
     semantics and the idempotence argument are unchanged."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -37,10 +37,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bigdata_group4_app_spark.registry import QUERY_REGISTRY  # noqa: E402
 from bigdata_group4_app_spark.session import get_spark  # noqa: E402
-from bigdata_group4_app_spark.sources.registry import (  # noqa: E402
-    SCHEMAS,
-    load_table,
-)
+from bigdata_group4_app_spark.sources.registry import load_table  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 

@@ -8,7 +8,6 @@ Hamming-banded SimHash, MinHash (b,r) banding lever) as they land.
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 
@@ -206,6 +205,47 @@ class TestFixtureSchemaEvolution:
         # both schema regimes actually present in the read
         tiers = {t[-1] for t in got}
         assert None in tiers and len(tiers) > 1
+
+    def test_schema_hints_match_segment_footers(self, spark):
+        """The schema hint is trusted, not validated, at read time: every
+        (snapshot, table) of the fixture catalogs that commits no schema
+        is read with _DOC_SCHEMA_V1 / _EMB_SCHEMA_V1, so the hint's
+        columns must equal each listed segment's footer columns — a
+        hinted column absent from the segment would read as silent NULLs,
+        a segment column absent from the hint would vanish. Footers are
+        read with pyarrow: no Spark job."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        hints = {
+            "documents": S._DOC_SCHEMA_V1,
+            "archive": S._DOC_SCHEMA_V1,
+            "embeddings": S._EMB_SCHEMA_V1,
+        }
+        n_checked = 0
+        for d in (
+            S.ensure_fixture_catalog(spark, SF_SMOKE),
+            S.ensure_wap_catalog(spark, SF_SMOKE),
+            S.ensure_posdel_catalog(spark, SF_SMOKE),
+        ):
+            for sid in S.committed_snapshot_ids(d):
+                m = S.read_manifest(d, sid)
+                for table, rels in m["tables"].items():
+                    if table in m.get("schemas", {}):
+                        continue  # the committed schema wins over a hint
+                    hinted = {
+                        c.split()[0] for c in hints[table].split(", ")
+                    }
+                    for rel in rels:
+                        files = glob.glob(os.path.join(d, rel, "*.parquet"))
+                        assert files, f"{d} {rel}: no parquet file"
+                        for f in files:
+                            assert set(pq.read_schema(f).names) == hinted, (
+                                f"{d} snapshot {sid} {table} {f}"
+                            )
+                            n_checked += 1
+        assert n_checked > 0
 
     def test_pinned_snapshots_keep_pre_evolution_schema(self, spark):
         from bigdata_group4_app_spark.operators import snapshots as S

