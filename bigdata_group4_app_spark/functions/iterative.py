@@ -25,14 +25,9 @@ checkpointed row set (the CollectMetrics node sits above the full plan),
 not estimates — the loop semantics and round counts are bit-identical to
 the count()-based form.
 
-Plan-capture compatibility: ``scripts/capture_plan.py`` monkey-patches
-``localCheckpoint`` to identity so iterative queries expose their whole
-per-round lineage in one plan. Under that patch no action fires and
-``Observation.get`` would block forever — so the helper checks whether
-``localCheckpoint`` handed back the very frame it was called on (a real
-checkpoint always returns a new frame) and only then fires one explicit
-count-shaped action, restoring the old per-round cost in capture mode
-only.
+Each call is one round: ``scripts/profiler.py`` counts a query's rounds
+as its ``checkpoint_with_metrics`` calls, and the per-round exchanges
+show as the stage count of each round's job in the Spark event log.
 """
 
 from __future__ import annotations
@@ -70,7 +65,4 @@ def checkpoint_with_metrics(
     """
     obs = Observation()
     observed = df.observe(obs, *metrics)
-    out = observed.localCheckpoint()
-    if out is observed:
-        out.count()  # identity-patched checkpoint: no action has run
-    return out, obs.get
+    return observed.localCheckpoint(), obs.get

@@ -364,10 +364,12 @@ def customer_year_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(y == 1996, 1).otherwise(0)).alias("h96"),
         )
     )
+    h95, h96 = F.col("h95") == 1, F.col("h96") == 1
+    # count_if, not sum: 0 (not NULL) when no customer is active
     return flags.agg(
-        F.sum(F.col("h95") * F.col("h96")).alias("retained"),
-        F.sum(F.col("h95") * (1 - F.col("h96"))).alias("churned"),
-        F.sum(F.col("h96") * (1 - F.col("h95"))).alias("acquired"),
+        F.count_if(h95 & h96).alias("retained"),
+        F.count_if(h95 & ~h96).alias("churned"),
+        F.count_if(h96 & ~h95).alias("acquired"),
         F.count(F.lit(1)).alias("total_active"),
     )
 
@@ -1753,7 +1755,7 @@ def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(F.col(c).isNull(), F.col("cnt")).otherwise(0)
                 ).alias("n_nulls"),
                 # distinct = non-null group keys (countDistinct semantics)
-                F.sum((~F.col(c).isNull()).cast("long")).alias("n_distinct"),
+                F.count(c).alias("n_distinct"),
                 mm(c, F.min(c)).alias("min_str"),
                 mm(c, F.max(c)).alias("max_str"),
             )

@@ -229,10 +229,11 @@ def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     fp = docs.select(F.md5(F.lower(F.trim(F.col("text")))).alias("fp"))
     per_fp = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))
+    n_docs = F.coalesce(F.sum("c"), F.lit(0))  # 0, not NULL, on no docs
     return per_fp.agg(
-        F.sum("c").alias("n_docs"),
+        n_docs.alias("n_docs"),
         F.count(F.lit(1)).alias("n_distinct"),
-        (F.sum("c") - F.count(F.lit(1))).alias("n_dup_docs"),
+        (n_docs - F.count(F.lit(1))).alias("n_dup_docs"),
     )
 
 

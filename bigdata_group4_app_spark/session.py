@@ -69,12 +69,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # manifest IS the listing. Spark's default threshold (32 paths)
     # turns those constructions into a distributed LISTING JOB,
     # which on a local FS costs more than it saves (measured 0.62 →
-    # 0.35 s per 64-segment read at sf0.1). Parameterized: on
-    # object-store deployments with very wide tables, lower it via
-    # the env knob so listing parallelizes again (r13 optimization,
-    # guide §6).
-    spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold",
-        os.environ.get("SPARK_GRAFT_LISTING_JOB_THRESHOLD", "128"),
-    )
+    # 0.35 s per 64-segment read at sf0.1).
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
     return spark

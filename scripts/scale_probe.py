@@ -19,7 +19,9 @@ Usage:
     python scripts/scale_probe.py [--copies 2,5] [--passes 2]
 
 Writes replicated dirs under /tmp/scale_x{N}/ (reused if present) and
-prints one JSON line per scale with per-query wall seconds.
+prints one JSON line per scale: per query, the min wall seconds and the
+Spark jobs of each pass, measured by ``scripts/profiler.py::measure``
+(one warm-up, then cache-cleared passes).
 """
 
 from __future__ import annotations
@@ -28,15 +30,12 @@ import argparse
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bigdata_group4_app_spark.registry import QUERY_REGISTRY  # noqa: E402
-from bigdata_group4_app_spark.session import get_spark  # noqa: E402
 from bigdata_group4_app_spark.sources.registry import load_table  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
@@ -122,32 +121,6 @@ def replicate(spark, n_copies: int, out_dir: str) -> None:
         out.write.mode("overwrite").parquet(dst)
 
 
-def _resolve(q):
-    """Registry entries first; probe-only callables (e.g. the scaled-k
-    SemDeDup production form, deliberately unregistered) fall back to
-    the similarity module namespace."""
-    if q in QUERY_REGISTRY:
-        return QUERY_REGISTRY[q]
-    from bigdata_group4_app_spark.operators import similarity
-
-    return getattr(similarity, q)
-
-
-def time_queries(
-    spark, sf_dir: str, passes: int, queries=None
-) -> dict[str, float]:
-    timings: dict[str, float] = {}
-    for _ in range(passes):
-        for q in queries or PROBE_QUERIES:
-            t0 = time.perf_counter()
-            _resolve(q)(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = round(time.perf_counter() - t0, 3)
-            timings[q] = min(dt, timings.get(q, dt))
-    return timings
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--copies", default="2,5")
@@ -158,20 +131,32 @@ def main() -> None:
         help="comma-separated query names (default: PROBE_QUERIES)",
     )
     args = ap.parse_args()
-    qlist = args.queries.split(",") if args.queries else None
-    spark = get_spark(app_name="scale-probe")
-    base = time_queries(spark, BASE_SF, args.passes, qlist)
-    print(json.dumps({"scale": 1, "queries": base}), flush=True)
-    for n in [int(x) for x in args.copies.split(",")]:
-        out_dir = f"/tmp/scale_x{n}"
-        replicate(spark, n, out_dir)
-        t = time_queries(spark, out_dir, args.passes, qlist)
-        ratios = {q: round(t[q] / base[q], 2) for q in t if base.get(q)}
-        print(
-            json.dumps({"scale": n, "queries": t, "ratio_vs_1x": ratios}),
-            flush=True,
-        )
-    spark.stop()
+    names = args.queries.split(",") if args.queries else PROBE_QUERIES
+    # imported here, not at the top: perfbench/run.py imports FACT_KEYS
+    # and OFFSET from this module and must not load a second run.py
+    from profiler import measure, profiled_spark
+
+    with profiled_spark("scale-probe") as spark:
+        for n in [1] + [int(x) for x in args.copies.split(",")]:
+            sf_dir = BASE_SF if n == 1 else f"/tmp/scale_x{n}"
+            if n > 1:
+                replicate(spark, n, sf_dir)
+            res = measure(spark, names, sf_dir, args.passes)
+            line: dict = {"scale": n, "queries": {}, "jobs": {}}
+            for q, r in res.items():
+                if "error" in r:
+                    line.setdefault("errors", {})[q] = r["error"]
+                    continue
+                line["queries"][q] = r["min_s"]
+                line["jobs"][q] = [sum(p["jobs"].values()) for p in r["passes"]]
+            if n == 1:
+                base = line["queries"]
+            else:
+                line["ratio_vs_1x"] = {
+                    q: round(t / base[q], 2)
+                    for q, t in line["queries"].items() if base.get(q)
+                }
+            print(json.dumps(line), flush=True)
 
 
 if __name__ == "__main__":

@@ -5,9 +5,7 @@ that use them.
 The optimization claim (OPTIMIZATION_r14.md §1) is that observing the
 convergence aggregates during the eager localCheckpoint's own job is
 (a) exact — identical numbers to a separate count()/filter-count, and
-(b) free — no extra Spark job beyond the checkpoint's; and that the
-capture-mode fallback (identity-patched localCheckpoint, as
-scripts/capture_plan.py does) cannot deadlock. The loop outputs
+(b) free — no extra Spark job beyond the checkpoint's. The loop outputs
 themselves stay pinned by their oracle checks and the older suites;
 these tests pin the MECHANISM so a refactor can't silently turn the
 metrics into estimates or resurrect the per-round count job.
@@ -61,25 +59,8 @@ class TestCheckpointWithMetrics:
         )
         assert m["n"] == 101
         assert len(fold) < len(base)  # the count job is gone
-        # no fallback count on a real checkpoint: exactly a bare checkpoint
+        # exactly the jobs of a bare checkpoint
         assert len(fold) == len(bare)
-
-    def test_identity_checkpoint_fallback_no_deadlock(self, spark, skewed_df):
-        # plan-capture scripts patch localCheckpoint to identity; the
-        # helper must detect it and fire one explicit action instead of
-        # blocking forever on Observation.get
-        from pyspark.sql.classic.dataframe import DataFrame as CDF
-
-        real = CDF.localCheckpoint
-        try:
-            CDF.localCheckpoint = lambda self, eager=True: self  # type: ignore
-            out, m = checkpoint_with_metrics(
-                skewed_df, F.count(F.lit(1)).alias("n")
-            )
-            assert m["n"] == 5000
-            assert out.count() == 5000
-        finally:
-            CDF.localCheckpoint = real  # type: ignore
 
     def test_empty_frame_metrics(self, spark):
         empty = spark.range(0).select(F.col("id").alias("k"))

@@ -1,11 +1,13 @@
 """Every registered query that no family test checks, against its DuckDB
 oracle at sf0.01, through the one oracle comparator
-(``assert_matches_oracle`` -> ``drive_contract.compare``); plus tests
-that pin what that comparator rejects."""
+(``assert_matches_oracle`` -> ``drive_contract.compare``); tests that
+pin what that comparator rejects; and the all-empty-tables variant for
+the queries fixed to match it."""
 
 from __future__ import annotations
 
 import math
+import pathlib
 
 import pytest
 
@@ -21,7 +23,7 @@ from bigdata_group4_app_spark.operators import (
     stats,
     text,
 )
-from bigdata_group4_app_spark.registry import ORACLE_REGISTRY
+from bigdata_group4_app_spark.registry import ORACLE_REGISTRY, QUERY_REGISTRY
 
 from .conftest import (
     SF_CORRECT,
@@ -83,3 +85,18 @@ def test_comparator_rejects_hugeint_sum(spark):
         assert_matches_oracle(
             df, "SELECT sum(x) AS s FROM (VALUES (1), (2)) t(x)", SF_SMOKE
         )
+
+
+@pytest.mark.parametrize(
+    "name", ["customer_year_sets", "dedup_exact_summary", "events_profile"]
+)
+def test_empty_input_aggregates_are_zero(spark, tmp_path, name):
+    """Over empty tables a global count or sum is 0 in the oracle, never
+    NULL: every sf0.001 table, sliced to 0 rows with its schema kept."""
+    import pyarrow.parquet as pq
+
+    for src in pathlib.Path(SF_SMOKE).glob("*.parquet"):
+        pq.write_table(pq.read_table(src).slice(0, 0), tmp_path / src.name)
+    assert_matches_oracle(
+        QUERY_REGISTRY[name](spark, str(tmp_path)), ORACLE_REGISTRY[name], str(tmp_path)
+    )
