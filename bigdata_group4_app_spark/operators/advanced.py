@@ -2792,7 +2792,7 @@ def _hw_spark_fold() -> dict[str, str]:
     fit = "acc.lev + acc.tr + acc.s1"
     roll = ", ".join(f"'s{k}', acc.s{k + 1}" for k in range(1, 7))
     seas_init = ", ".join(
-        f"'s{k}', element_at({ys}, {k}) - {w1}" for k in range(1, 8)
+        f"'s{k}', try_element_at({ys}, {k}) - {w1}" for k in range(1, 8)
     )
     step = (
         f"named_struct('lev', {ln}, 'tr', {trn}, {roll}, 's7', {sn}, "
@@ -2802,7 +2802,7 @@ def _hw_spark_fold() -> dict[str, str]:
         f"named_struct('lev', {w1}, 'tr', {tr0}, {seas_init}, "
         "'f', CAST(array() AS ARRAY<BIGINT>))"
     )
-    rest = f"slice({ys}, 8, size({ys}) - 7)"
+    rest = f"slice({ys}, 8, greatest(size({ys}) - 7, 0))"
     return {
         "ys": ys,
         "fold": f"aggregate({rest}, {init}, (acc, y) -> {step})",
@@ -2862,7 +2862,7 @@ def holt_winters_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     fc = res.select(
         F.explode(F.expr(f"sequence(1, {HW_HORIZON})")).alias("h"), "s", "r"
     ).select(
-        F.expr("date_add(element_at(s, -1).day, h)").alias("day"),
+        F.expr("date_add(try_element_at(s, -1).day, h)").alias("day"),
         F.lit("forecast").alias("kind"),
         F.lit(None).cast("double").alias("actual"),
         (
@@ -3013,7 +3013,10 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'es', CAST(array() AS ARRAY<BIGINT>), "
         "'ps', CAST(array() AS ARRAY<BIGINT>))"
     )
-    tail = f"slice({ys}, {EWMA_BASE + 1}, size({ys}) - {EWMA_BASE})"
+    tail = (
+        f"slice({ys}, {EWMA_BASE + 1}, "
+        f"greatest(size({ys}) - {EWMA_BASE}, 0))"
+    )
     pre = ser.select(
         "s",
         F.expr(mu0).alias("mu0_i4"),

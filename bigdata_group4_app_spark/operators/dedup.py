@@ -158,14 +158,20 @@ def _persist_shingles(sh: DataFrame) -> DataFrame:
 
 
 def _jaccard_verify(
-    pairs: DataFrame, sh: DataFrame, sizes: DataFrame | None = None
+    pairs: DataFrame,
+    sh: DataFrame,
+    sizes: DataFrame | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs only: |A∩B| / (|A|+|B|-|A∩B|).
     Intersection counts come from joining the hashed-shingle relation on
     the 8-byte hash; per-doc set sizes are a tiny aggregate Catalyst
     broadcasts onto the result. Callers that already aggregate per doc
     (the MinHash signature pass) pass their (doc_id, n) relation as
-    ``sizes`` so the shingle relation isn't folded a second time."""
+    ``sizes`` so the shingle relation isn't folded a second time.
+    ``carry`` names pair columns functionally dependent on the pair
+    (e.g. the streaming index's ``peer_is_corpus``); they ride through
+    the intersection aggregate instead of a join back to ``pairs``."""
     if sizes is None:
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -175,19 +181,22 @@ def _jaccard_verify(
             (F.col("s2.doc_id") == pairs.doc_id_2)
             & (F.col("s2.h") == F.col("s1.h")),
         )
-        .groupBy("doc_id_1", "doc_id_2")
+        .groupBy("doc_id_1", "doc_id_2", *carry)
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return _jaccard_from_inter(inter, sizes)
+    return _jaccard_from_inter(inter, sizes, carry)
 
 
-def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+def _jaccard_from_inter(
+    inter: DataFrame, sizes: DataFrame, carry: tuple[str, ...] = ()
+) -> DataFrame:
     return (
         inter.join(sizes.alias("n1"), inter.doc_id_1 == F.col("n1.doc_id"))
         .join(sizes.alias("n2"), inter.doc_id_2 == F.col("n2.doc_id"))
         .select(
             "doc_id_1",
             "doc_id_2",
+            *carry,
             F.round(
                 F.col("inter")
                 / (F.col("n1.n") + F.col("n2.n") - F.col("inter")),

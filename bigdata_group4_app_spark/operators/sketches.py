@@ -432,7 +432,8 @@ def bloom_filter_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_probes",
             "n_false_positives",
             F.round(
-                F.col("n_false_positives") / F.col("n_probes").cast("double"),
+                F.col("n_false_positives")
+                / F.nullif(F.col("n_probes").cast("double"), F.lit(0.0)),
                 4,
             ).alias("measured_fpr"),
             F.round(fill * fill * fill, 4).alias("predicted_fpr"),

@@ -2759,15 +2759,16 @@ def cmh_stratified_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chi2 = (
         "power(greatest(abs(sa - se) - CAST(0.5 AS DOUBLE),"
-        " CAST(0.0 AS DOUBLE)), 2) / sv"
+        " CAST(0.0 AS DOUBLE)), 2) / nullif(sv, CAST(0.0 AS DOUBLE))"
     )
     return folded.select(
         "n_strata",
         (F.round(F.expr(chi2), 4) + F.lit(0.0)).alias("chi2_cmh"),
         F.expr(two_sided_p_sql(f"sqrt({chi2})")).alias("p_value"),
-        (F.round(F.expr("sad / sbc"), 4) + F.lit(0.0)).alias(
-            "odds_ratio_mh"
-        ),
+        (
+            F.round(F.expr("sad / nullif(sbc, CAST(0.0 AS DOUBLE))"), 4)
+            + F.lit(0.0)
+        ).alias("odds_ratio_mh"),
     )
 
 
@@ -2905,7 +2906,7 @@ def jackknife_ratio_se(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("r_i6").alias("sr"),
         F.sum(F.col("r_i6") * F.col("r_i6")).alias("srr"),
     )
-    dd = F.col("d_valid").cast("double")
+    dd = F.nullif(F.col("d_valid").cast("double"), F.lit(0.0))
     sse = (
         F.col("srr").cast("double")
         - F.col("sr").cast("double") * F.col("sr").cast("double") / dd
@@ -3948,7 +3949,10 @@ def ipw_churn_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round((ht_t - ht_c) / F.col("n_used").cast("double"), 4)
             + F.lit(0.0)
         ).alias("ate_ht"),
-        (F.round((ht_t - ht_c) / wsum, 4) + F.lit(0.0)).alias("ate_hajek"),
+        (
+            F.round((ht_t - ht_c) / F.nullif(wsum, F.lit(0.0)), 4)
+            + F.lit(0.0)
+        ).alias("ate_hajek"),
         (F.when(
             (F.col("nt_used") > 0)
             & (F.col("n_used") > F.col("nt_used")),

@@ -14,7 +14,9 @@ than re-scanning the sink — the hook and semantics are identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import os
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
@@ -54,8 +56,6 @@ def _committed_versions(state_dir: str) -> list[int]:
     that readers ignore.
     Local-FS pointer logic; on a real lake this whole versioning concern
     is what a Delta/Iceberg transactional commit replaces."""
-    import os
-
     if not os.path.isdir(state_dir):
         return []
     return sorted(
@@ -203,8 +203,6 @@ def _claim_version(state_dir: str) -> int:
     writer's in-progress segment. On a real lake this whole function
     is the transaction log's optimistic-commit slot (Delta/Iceberg
     ``version.json`` put-if-absent)."""
-    import os
-
     os.makedirs(state_dir, exist_ok=True)
     while True:
         existing = [
@@ -228,8 +226,6 @@ def _retired_versions(state_dir: str) -> set[int]:
     not part of the commit (the Delta/Iceberg vacuum split), so a crash
     between the compaction commit and the input cleanup can never make
     readers double-count rows."""
-    import os
-
     retired: set[int] = set()
     for v in _committed_versions(state_dir):
         mf = os.path.join(state_dir, f"v{v}", "_COMPACTED_FROM")
@@ -257,6 +253,23 @@ def _live_versions(state_dir: str) -> list[int]:
 # listing threshold)
 _SHINGLES_DDL = "doc_id bigint, h bigint"
 _BANDS_DDL = "doc_id bigint, seed int, mh bigint"
+# the same rule for the other segments the ingest steps write and read
+# back: the verdict sink and the catalog's one-row doc_stats table
+_VERDICTS_DDL = (
+    "doc_id bigint, verdict string, n_corpus_dups bigint, n_batch_dups bigint"
+)
+_DOC_STATS_DDL = "n_docs bigint, n_chars bigint"
+
+
+def _known_ids(store: DataFrame, ids: DataFrame) -> DataFrame:
+    """The ``doc_id`` rows of ``store`` (an O(corpus) segment scan) whose
+    id is in ``ids`` (an O(batch) relation). The store is streamed past
+    the broadcast ids, so it is scanned but never shuffled; the result is
+    at most K rows per batch id, small enough to broadcast into the
+    anti-join that drops them."""
+    return store.select("doc_id").join(
+        F.broadcast(ids.select("doc_id")), "doc_id", "semi"
+    )
 
 
 def read_minhash_index(spark, state_dir: str, versions: list[int] | None = None):
@@ -341,7 +354,6 @@ def compact_minhash_index(
 
     Returns the retired version list, or None when fewer than
     ``min_segments`` live segments exist (nothing to do)."""
-    import os
     import shutil
 
     live = _live_versions(state_dir) if input_versions is None else input_versions
@@ -363,12 +375,12 @@ def compact_minhash_index(
 
 def minhash_index_step(batch_df: DataFrame, state_dir: str) -> None:
     """One micro-batch step of the streaming near-dup index: shingle the
-    batch docs through the SAME ``_shingles_from`` / ``_minhash_sig_cands``
-    definitions the batch family runs, probe the persisted corpus band
-    index for candidates, exact-jaccard-verify, emit per-doc verdicts
-    (``dup_of_corpus`` / ``dup_in_batch`` / ``fresh`` — the
-    ``incremental_minhash_lsh`` fold), and commit a new index version
-    that includes the batch.
+    batch docs through the SAME ``_shingles_from`` / ``_minhash_sig`` /
+    ``_minhash_long`` definitions the batch family runs, probe the
+    persisted corpus band index for candidates, exact-jaccard-verify,
+    emit per-doc verdicts (``dup_of_corpus`` / ``dup_in_batch`` /
+    ``fresh`` — the ``incremental_minhash_lsh`` fold), and commit a new
+    index version that includes the batch.
 
     Exactly-once on at-least-once replay: the batch dedups within
     itself first, docs whose ids are already in the index are dropped
@@ -389,17 +401,20 @@ def minhash_index_step(batch_df: DataFrame, state_dir: str) -> None:
     INGESTED, not the smallest id across the whole day) —
     ``dup_in_batch`` is scoped to the same micro-batch. With the corpus
     pre-seeded and the day's docs in one micro-batch this reproduces
-    ``incremental_minhash_lsh`` exactly (pinned by test). Scale shape:
-    the probe is a plain (seed, mh) equi-join against a parquet-backed
-    index — size-driven strategy, no broadcast hint, the same
-    self-defending regime the batch operator guards into above its
-    broadcast threshold; at 100 TB the index is a key-bucketed table so
-    the probe needs no index-side shuffle at all."""
+    ``incremental_minhash_lsh`` exactly (pinned by test).
+
+    Scale shape: every relation of the micro-batch (its new docs, their
+    shingles and bands, the candidate pairs, the shingles to verify) is
+    computed once. The ones bounded by the micro-batch are broadcast by
+    hint, so the index — its doc ids for the seen set, its bands for the
+    candidate probe, its shingles for the corpus candidates — is scanned
+    and streamed past them but never shuffled, with auto-broadcast off
+    too (plans/r15). The seen-set scan itself is still O(corpus)."""
     from ..operators.dedup import (
         JACCARD_MINHASH_THRESHOLD,
         _jaccard_verify,
         _minhash_long,
-        _minhash_sig_cands,
+        _minhash_sig,
         _shingles_from,
     )
 
@@ -411,86 +426,94 @@ def minhash_index_step(batch_df: DataFrame, state_dir: str) -> None:
     sh_state, bands_state = read_minhash_index(
         spark, state_dir, versions=_live_versions(state_dir)
     )
-    docs = batch_df.select("doc_id", "text").dropDuplicates(["doc_id"])
+    # Broadcast hints in this step mark relations bounded by the
+    # micro-batch (the trigger size), never by the corpus: the planner
+    # cannot see that bound (a checkpoint keeps its pre-checkpoint join
+    # estimate), and every index side stays the streamed one.
+    batch = batch_df.select("doc_id", "text")
+    docs = batch.dropDuplicates(["doc_id"])
     if bands_state is not None:
-        seen = bands_state.select("doc_id").distinct()
-        docs = docs.join(seen, "doc_id", "left_anti")
-    if docs.limit(1).count() == 0:
+        seen = _known_ids(bands_state, batch)  # O(batch): K rows per id
+        docs = docs.join(F.broadcast(seen), "doc_id", "left_anti")
+    # the new-doc set, computed once; its row count is observed by the
+    # checkpoint's own job
+    n_new = Observation()
+    docs = docs.observe(n_new, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    if n_new.get["n"] == 0:
         return  # pure replay: nothing new, nothing to write
     sh_new = _shingles_from(docs).localCheckpoint()
-    sig_new, _ = _minhash_sig_cands(sh_new)
-    bands_new = _minhash_long(sig_new).localCheckpoint()
+    bands_new = _minhash_long(_minhash_sig(sh_new)).localCheckpoint()
 
-    intra = (
-        bands_new.alias("a")
+    # candidates: every index band (peer_is_corpus 1) and every new band
+    # (0, the lower id as peer) probed against the new docs' bands, which
+    # are O(batch) and broadcast
+    probe = bands_new.withColumn("peer_is_corpus", F.lit(0))
+    if bands_state is not None:
+        probe = bands_state.withColumn("peer_is_corpus", F.lit(1)).unionByName(
+            probe
+        )
+    cands = (
+        probe.alias("b")
         .join(
-            bands_new.alias("b"),
+            F.broadcast(bands_new).alias("a"),
             (F.col("a.seed") == F.col("b.seed"))
             & (F.col("a.mh") == F.col("b.mh"))
-            & (F.col("b.doc_id") < F.col("a.doc_id")),
+            & (
+                (F.col("b.peer_is_corpus") == 1)
+                | (F.col("b.doc_id") < F.col("a.doc_id"))
+            ),
         )
         .select(
             F.col("a.doc_id").alias("doc_id_1"),
             F.col("b.doc_id").alias("doc_id_2"),
-            F.lit(0).alias("peer_is_corpus"),
+            "b.peer_is_corpus",
         )
+        .distinct()
+        .localCheckpoint()
     )
-    if bands_state is not None:
-        cross = (
-            bands_state.alias("b")
-            .join(
-                bands_new.alias("a"),
-                (F.col("a.seed") == F.col("b.seed"))
-                & (F.col("a.mh") == F.col("b.mh")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_id_1"),
-                F.col("b.doc_id").alias("doc_id_2"),
-                F.lit(1).alias("peer_is_corpus"),
-            )
-        )
-        cands = cross.unionByName(intra).distinct().localCheckpoint()
-    else:
-        cands = intra.distinct().localCheckpoint()
     sh_all = sh_new
     if sh_state is not None:
+        # the corpus ids are candidates of new docs: O(batch)
         corpus_ids = cands.filter(F.col("peer_is_corpus") == 1).select(
             F.col("doc_id_2").alias("doc_id")
         )
         sh_all = sh_new.unionByName(
-            sh_state.join(corpus_ids.distinct(), "doc_id", "semi")
+            sh_state.join(F.broadcast(corpus_ids), "doc_id", "semi")
+        ).localCheckpoint()
+    # a pair's peer_is_corpus is fixed by the pair (new docs are never in
+    # the index), so it rides through the intersection aggregate; cands
+    # is O(batch). Every new doc gets one zero row, so one aggregate
+    # gives every verdict.
+    dups = _jaccard_verify(
+        F.broadcast(cands), sh_all, carry=("peer_is_corpus",)
+    ).filter(F.col("jaccard") >= JACCARD_MINHASH_THRESHOLD)
+    counts = (
+        docs.select("doc_id", F.lit(0).alias("c"), F.lit(0).alias("b"))
+        .unionByName(
+            dups.select(
+                F.col("doc_id_1").alias("doc_id"),
+                F.col("peer_is_corpus").alias("c"),
+                (1 - F.col("peer_is_corpus")).alias("b"),
+            )
         )
-    verified = (
-        _jaccard_verify(cands.select("doc_id_1", "doc_id_2"), sh_all)
-        .filter(F.col("jaccard") >= JACCARD_MINHASH_THRESHOLD)
-        .join(cands, ["doc_id_1", "doc_id_2"])
+        .groupBy("doc_id")
+        .agg(F.sum("c").alias("n_corpus"), F.sum("b").alias("n_batch"))
     )
-    ev = verified.groupBy(F.col("doc_id_1").alias("doc_id")).agg(
-        F.sum("peer_is_corpus").alias("n_corpus_dups"),
-        F.sum(1 - F.col("peer_is_corpus")).alias("n_batch_dups"),
-    )
-    verdicts = (
-        docs.select("doc_id")
-        .join(ev, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.coalesce("n_corpus_dups", F.lit(0)) > 0, "dup_of_corpus")
-            .when(F.coalesce("n_batch_dups", F.lit(0)) > 0, "dup_in_batch")
-            .otherwise("fresh")
-            .alias("verdict"),
-            F.coalesce("n_corpus_dups", F.lit(0)).alias("n_corpus_dups"),
-            F.coalesce("n_batch_dups", F.lit(0)).alias("n_batch_dups"),
-        )
-        .localCheckpoint()
+    verdicts = counts.select(
+        "doc_id",
+        F.when(F.col("n_corpus") > 0, "dup_of_corpus")
+        .when(F.col("n_batch") > 0, "dup_in_batch")
+        .otherwise("fresh")
+        .alias("verdict"),
+        F.col("n_corpus").alias("n_corpus_dups"),
+        F.col("n_batch").alias("n_batch_dups"),
     )
     out_dir = f"{state_dir}/verdicts"
-    fresh_verdicts = verdicts
-    try:
-        existing = spark.read.parquet(out_dir).select("doc_id").distinct()
-        fresh_verdicts = verdicts.join(existing, "doc_id", "left_anti")
-    except AnalysisException:
-        pass  # first batch: verdict sink doesn't exist yet
-    fresh_verdicts.write.mode("append").parquet(out_dir)
+    if os.path.isdir(out_dir):
+        existing = spark.read.schema(_VERDICTS_DDL).parquet(out_dir)
+        done = _known_ids(existing, docs)  # O(batch): one row per id
+        verdicts = verdicts.join(F.broadcast(done), "doc_id", "left_anti")
+    verdicts.write.mode("append").parquet(out_dir)
 
     # append-only segment: ONLY this batch's rows (never a rewrite of
     # the cumulative index); slot claimed atomically over ALL existing
@@ -501,8 +524,6 @@ def minhash_index_step(batch_df: DataFrame, state_dir: str) -> None:
     # version-level commit marker AFTER both members landed (the
     # per-member parquet _SUCCESS files are not enough: a crash between
     # the two writes must leave the segment uncommitted as a whole)
-    import os
-
     open(os.path.join(state_dir, f"v{nxt}", "_SUCCESS"), "w").close()
 
 
@@ -611,9 +632,9 @@ def _batch_delta(
     segment and the incremental one-row ``doc_stats`` segment. Returns
     ``(documents rel, doc_stats rel, the new segment's zone map)``, or
     None when nothing is new. Both ingest steps commit what this
-    returns, each through its own commit call."""
-    import os
-
+    returns, each through its own commit call. Every aggregate the step
+    needs (batch id bounds, the new segment's bounds and stats delta) is
+    observed by the checkpoint job that materializes its relation."""
     from ..operators.snapshots import (
         prune_segments_by_range,
         read_snapshot_table,
@@ -627,10 +648,13 @@ def _batch_delta(
         # read to the committed segments whose manifest zone maps
         # overlap them — the dedup anti-join never opens a segment the
         # manifest can prove disjoint (an empty catalog has no seen set,
-        # so the first batch skips this aggregate)
-        b = docs.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
+        # so the first batch skips this). The bounds are observed by the
+        # job that materializes the deduplicated batch.
+        bounds = Observation()
+        docs = docs.observe(
+            bounds, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        ).localCheckpoint()
+        b = bounds.get
         if b["lo"] is None:
             return None  # empty batch
         seen_paths = prune_segments_by_range(
@@ -644,13 +668,17 @@ def _batch_delta(
                 *[os.path.join(catalog_dir, p) for p in seen_paths]
             )
             docs = docs.join(seen, "doc_id", "left_anti")
-    new = docs.localCheckpoint()  # one materialization serves id + stats
-    agg = new.agg(
+    # one materialization serves the segment write, and its own job
+    # observes the new segment's id bounds and the stats delta
+    delta = Observation()
+    new = docs.observe(
+        delta,
         F.min("doc_id").alias("m"),
         F.max("doc_id").alias("mx"),
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.length("text")), F.lit(0)).alias("c"),
-    ).collect()[0]
+    ).localCheckpoint()
+    agg = delta.get
     first = agg["m"]
     if first is None:
         return None  # pure replay: nothing new
@@ -661,12 +689,14 @@ def _batch_delta(
     prev_n = prev_c = 0
     if head is not None:
         prev = read_snapshot_table(
-            spark, catalog_dir, "doc_stats", head["id"]
+            spark, catalog_dir, "doc_stats", head["id"], schema=_DOC_STATS_DDL
         ).collect()[0]
         prev_n, prev_c = prev["n_docs"], prev["n_chars"]
-    stats = spark.createDataFrame(
-        [(prev_n + agg["n"], prev_c + agg["c"])],
-        "n_docs long, n_chars long",
+    # a JVM literal row in one partition: no Python worker runs for the
+    # write, and the segment is one file
+    stats = spark.range(1, numPartitions=1).select(
+        F.lit(prev_n + agg["n"]).cast("bigint").alias("n_docs"),
+        F.lit(prev_c + agg["c"]).cast("bigint").alias("n_chars"),
     )
     stats_rel = write_segment(
         stats, catalog_dir, "doc_stats", f"stats-{first}"
@@ -747,8 +777,6 @@ def publish_staging(
     :func:`abandon_staging`. A main that moved since the branch was
     cut makes the fast-forward refuse (diverged: re-stage); quiesce
     main maintenance over a staging window, the lakehouse WAP norm."""
-    import os
-
     from ..operators.snapshots import (
         fast_forward,
         read_manifest,

@@ -88,11 +88,26 @@ def test_comparator_rejects_hugeint_sum(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["customer_year_sets", "dedup_exact_summary", "events_profile"]
+    "name",
+    [
+        "customer_year_sets",
+        "dedup_exact_summary",
+        "events_profile",
+        # ANSI DIVIDE_BY_ZERO on an empty denominator
+        "bloom_filter_fpr_audit",
+        "cmh_stratified_test",
+        "ipw_churn_ate",
+        "jackknife_ratio_se",
+        # slice() length below 0 on an empty day series
+        "ewma_control_chart",
+        "holt_winters_daily",
+    ],
 )
 def test_empty_input_aggregates_are_zero(spark, tmp_path, name):
     """Over empty tables a global count or sum is 0 in the oracle, never
-    NULL: every sf0.001 table, sliced to 0 rows with its schema kept."""
+    NULL, a ratio over an empty denominator is NULL, never an ANSI error,
+    and a series fold over no days raises nothing: every sf0.001 table,
+    sliced to 0 rows with its schema kept."""
     import pyarrow.parquet as pq
 
     for src in pathlib.Path(SF_SMOKE).glob("*.parquet"):

@@ -1,7 +1,8 @@
 """``scripts/profiler.py``, the per-query measurement loop: its plan-shape
 counters on a fixed plan, and one end-to-end run at sf0.001 that pins
 the protocol (warm-up, then cache-cleared passes) and the event-log
-attribution of jobs to query steps."""
+attribution of jobs to query steps. Also ``bench.py``'s attribution of
+every job to its query's job group."""
 
 from __future__ import annotations
 
@@ -89,3 +90,15 @@ def test_profile_run_attributes_jobs_to_steps(tmp_path):
         assert p["jobs"]["construct"] > 0 and p["rounds"] > 0, p
     for p in q["churn_stats"]["passes"]:
         assert p["jobs"]["construct"] == 0 and p["jobs"]["execute"] > 0, p
+
+
+def test_bench_runs_each_query_under_its_job_group(spark, monkeypatch):
+    import bench
+
+    monkeypatch.setattr(bench, "SF_DIR", SF_SMOKE)
+    sc = spark.sparkContext
+    try:
+        bench._materialize(spark, "churn_stats")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("churn_stats")

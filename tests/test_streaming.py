@@ -703,3 +703,70 @@ def test_cdc_state_survives_crashed_overwrite(spark, tmp_path):
     merge_cdc_state(second, state)
     after = read_cdc_state(spark, state)
     assert after.count() >= len(before)
+
+
+# Spark jobs per micro-batch of the two ingest sink steps: (new batch,
+# replay of it). These counts did not vary over 10 measured batches at
+# local[8] and 6 at local[4]; some other plans' job counts move by one
+# between runs, so the budget is checked against the maximum over
+# _BUDGET_BATCHES batches.
+_INGEST_JOB_BUDGET = {
+    "minhash_index_step": (23, 4),
+    "catalog_commit_step": (7, 4),
+}
+_BUDGET_BATCHES = 2
+
+
+def test_ingest_sink_steps_job_budget(spark, tmp_path):
+    """Each step of one micro-batch computes every relation once: the job
+    counts of ``minhash_index_step`` and ``catalog_commit_step`` for a new
+    batch and for its replay stay within ``_INGEST_JOB_BUDGET``. The store
+    has the shape a long-running ingest has after maintenance: before each
+    measured batch the index is compacted to one segment and the catalog's
+    documents table to one segment under a committed head. Batches are
+    built from pandas frames, as perfbench's curator workload builds them."""
+    from bigdata_group4_app_spark.operators.snapshots import compact_table
+    from bigdata_group4_app_spark.streaming.sinks import (
+        catalog_commit_step,
+        compact_minhash_index,
+        minhash_index_step,
+    )
+
+    from .conftest import jobs_during
+
+    docs = (
+        load_table(spark, SF_SMOKE, "documents")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .toPandas()
+    )
+    n = 2 + _BUDGET_BATCHES
+    size = len(docs) // n
+    batches = [
+        spark.createDataFrame(
+            docs[i * size : (i + 1) * size], "doc_id long, text string"
+        )
+        for i in range(n)
+    ]
+    index, catalog = str(tmp_path / "index"), str(tmp_path / "catalog")
+    for b in batches[:2]:
+        minhash_index_step(b, index)
+        catalog_commit_step(b, catalog)
+    steps = {
+        "minhash_index_step": lambda b: minhash_index_step(b, index),
+        "catalog_commit_step": lambda b: catalog_commit_step(b, catalog),
+    }
+    seen = {name: ([], []) for name in steps}
+    for i, b in enumerate(batches[2:]):
+        compact_minhash_index(spark, index, min_segments=1)
+        compact_table(spark, catalog, "documents", f"compact-{i}")
+        for name, step in steps.items():
+            for kind, runs in zip(("new", "replay"), seen[name]):
+                tag = f"{name}-{kind}-{i}"
+                runs.append(len(jobs_during(spark, lambda: step(b), tag)[1]))
+    for name, (new, replay) in seen.items():
+        budget_new, budget_replay = _INGEST_JOB_BUDGET[name]
+        assert max(new) <= budget_new and max(replay) <= budget_replay, (
+            name,
+            seen[name],
+        )
