@@ -6,8 +6,13 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is materialized through the ``noop`` sink so the full physical
 plan executes (scan → shuffle → agg) without driver-collect overhead
-polluting the timing. A warmup query amortizes JVM/codegen startup out of
-the per-query numbers.
+polluting the timing. An untimed warmup pass amortizes JVM/codegen startup
+out of the per-query numbers.
+
+stderr carries the timed pass's per-query map, start offsets, canaries and
+one ``layers`` line: per query its construct seconds, Spark jobs, tasks and
+whole-stage-codegen compiles (jobs and tasks by the query's job group,
+through the status tracker), plus the pass total of compiles.
 """
 
 from __future__ import annotations
@@ -20,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdata_group4_app_spark.registry import QUERY_REGISTRY
-from bigdata_group4_app_spark.session import get_spark
+from bigdata_group4_app_spark.session import codegen_compiles, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -101,13 +106,37 @@ HEADLINE = [
 CANARIES = ["pricing_summary", "churn_stats", "doc_chunks", "minhash_lsh_pairs"]
 
 
-def _materialize(spark, name: str) -> None:
+def _materialize(spark, name: str) -> float:
     """Construct query ``name`` and run it through the noop sink, every
     Spark job of both steps under job group ``name``: an event log or the
     status tracker attributes each job, construction checkpoints
-    included, to its query."""
+    included, to its query. Returns the construction seconds."""
     spark.sparkContext.setJobGroup(name, name)
-    QUERY_REGISTRY[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    t0 = time.perf_counter()
+    df = QUERY_REGISTRY[name](spark, SF_DIR)
+    construct_s = time.perf_counter() - t0
+    df.write.format("noop").mode("overwrite").save()
+    return construct_s
+
+
+def _group_jobs(spark, name: str) -> set[int]:
+    """Ids of the jobs run under job group ``name`` that the status
+    tracker still holds, once the listener bus has drained."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def _tasks(spark, job_ids: set[int]) -> int:
+    """Tasks that ran in the stages of ``job_ids``: a stage shared by two
+    jobs counts once, and a skipped stage ran none."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = set()
+    for j in job_ids:
+        info = tracker.getJobInfo(j)
+        stages.update(info.stageIds if info else ())
+    infos = (tracker.getStageInfo(s) for s in stages)
+    return sum(i.numCompletedTasks for i in infos if i)
 
 
 def _time_canaries(spark, sweep_t0: float) -> dict[str, object]:
@@ -128,7 +157,10 @@ def main() -> None:
     # each plan shape's one-time whole-stage-codegen compile + JIT — a
     # fixed cost that amortizes to nothing at real scale but dominates
     # sub-second queries at sf0.1 (measured 2-4x inflation on first
-    # execution of a plan shape).
+    # execution of a plan shape). The compiles stay paid only because
+    # get_spark's generated-class cache holds every class of the sweep
+    # (session.py); the layers line's total_compiles counts the plan
+    # shapes the timed pass still had to compile.
     for name in sorted(QUERY_REGISTRY):
         _materialize(spark, name)
 
@@ -154,19 +186,33 @@ def main() -> None:
     # sweep (VERDICT r11 item 1a): any future drift window is locatable
     # post-hoc — names inflated between two canary points show exactly
     # WHERE on the sweep clock the host degraded
+    # per query [construct_s, jobs, tasks, compiles], read outside the
+    # timed span; jobs of the group that ran before this run (warm-up,
+    # canaries) are subtracted
+    layers: dict[str, list] = {}
     ordered = sorted(QUERY_REGISTRY)
     for i, name in enumerate(ordered):
         if i == len(ordered) // 2:
             canary["middle"] = _time_canaries(spark, sweep_t0)
+        earlier = _group_jobs(spark, name)
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         starts[name] = round(t0 - sweep_t0, 1)
-        _materialize(spark, name)
+        construct_s = _materialize(spark, name)
         timings[name] = round(time.perf_counter() - t0, 3)
+        compiles = codegen_compiles(spark) - c0
+        jobs = _group_jobs(spark, name) - earlier
+        layers[name] = [round(construct_s, 3), len(jobs), _tasks(spark, jobs), compiles]
         spark.catalog.clearCache()
     canary["end"] = _time_canaries(spark, sweep_t0)
 
     total = round(sum(timings.values()), 3)
     print(json.dumps({"all_queries": timings}), file=sys.stderr)
+    print(json.dumps({"layers": {
+        "fields": ["construct_s", "jobs", "tasks", "compiles"],
+        "total_compiles": sum(v[3] for v in layers.values()),
+        "queries": layers,
+    }}), file=sys.stderr)
     # host-drift telemetry: stderr only (stdout stays the ONE short line)
     print(json.dumps({"query_start_offsets": starts}), file=sys.stderr)
     print(json.dumps({"canary": canary}), file=sys.stderr)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.grouping import grouping_sets_with_total
 from ..functions.hashing import duck_md5_int, md5_int_sql
 from ..sources.registry import load_table
 
@@ -312,10 +313,13 @@ def dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical totals region → nation → grand total via ``rollup``.
+    """Hierarchical totals region → nation → grand total: the rollup's
+    sets.
 
-    Catalyst expands the rollup into a single Expand + hash aggregate —
-    one shuffle regardless of hierarchy depth. The region/nation dims are
+    Catalyst expands the (region, nation) and (region) sets into a single
+    Expand + hash aggregate — one shuffle regardless of hierarchy depth;
+    the grand total is a global aggregate, so it keeps its row over empty
+    input (``grouping_sets_with_total``). The region/nation dims are
     tiny, so both joins broadcast (no shuffle on the fact side before the
     agg)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -331,10 +335,14 @@ def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
     return (
-        joined.rollup("r_name", "n_name")
-        .agg(
-            F.round(F.sum("o_totalprice"), 4).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
+        grouping_sets_with_total(
+            joined,
+            [["r_name", "n_name"], ["r_name"]],
+            ["r_name", "n_name"],
+            [
+                F.round(F.sum("o_totalprice"), 4).alias("revenue"),
+                F.count(F.lit(1)).alias("n_orders"),
+            ],
         )
         .orderBy(
             F.col("r_name").asc_nulls_first(), F.col("n_name").asc_nulls_first()
@@ -408,16 +416,22 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def event_type_hour_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (event_type, hour-of-day): all four grouping combinations
-    in one Expand + single hash aggregate — one shuffle total."""
+    """CUBE over (event_type, hour-of-day): the three keyed grouping
+    combinations in one Expand + single hash aggregate — one shuffle —
+    and the grand total as a global aggregate, which keeps its row over
+    empty input (``grouping_sets_with_total``)."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "hour_of_day", F.hour("ts")
     )
     return (
-        ev.cube("event_type", "hour_of_day")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+        grouping_sets_with_total(
+            ev,
+            [["event_type", "hour_of_day"], ["event_type"], ["hour_of_day"]],
+            ["event_type", "hour_of_day"],
+            [
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 4).alias("sum_value"),
+            ],
         )
         .orderBy(
             F.col("event_type").asc_nulls_first(),

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.grouping import grouping_sets_with_total
 from ..sources.registry import load_table
 
 # ---------------------------------------------------------------------------
@@ -234,9 +235,11 @@ def segment_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def priority_region_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS: order counts/revenue by region, by priority, and
-    grand total — three report granularities in ONE scan + ONE Expand +
-    hash agg (vs three separate queries), the same single-pass shape as
-    the rollup/cube operators but with an explicit, sparse set list."""
+    grand total. The two keyed granularities run as ONE Expand + hash agg
+    (vs separate queries), the same shape as the rollup/cube operators
+    but with an explicit, sparse set list; the grand total is a global
+    aggregate, which keeps its row over empty input
+    (``grouping_sets_with_total``)."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -248,15 +251,14 @@ def priority_region_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "r_name")
     )
     return (
-        orders.join(dim, orders.o_custkey == dim.c_custkey)
-        .groupingSets(
-            [["r_name"], ["o_orderpriority"], []],
-            "r_name",
-            "o_orderpriority",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 4).alias("revenue"),
+        grouping_sets_with_total(
+            orders.join(dim, orders.o_custkey == dim.c_custkey),
+            [["r_name"], ["o_orderpriority"]],
+            ["r_name", "o_orderpriority"],
+            [
+                F.count(F.lit(1)).alias("n_orders"),
+                F.round(F.sum("o_totalprice"), 4).alias("revenue"),
+            ],
         )
         .orderBy(
             F.col("r_name").asc_nulls_first(),

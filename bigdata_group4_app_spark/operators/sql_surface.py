@@ -223,17 +223,19 @@ QUERIES = {
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS with ``grouping_id`` disambiguation: order revenue
     at four explicit granularities — (region, priority), (region),
-    (priority), grand total — in ONE aggregation pass. Unlike stacked
-    UNION ALL aggregates (4 scans + 4 shuffles), Catalyst's Expand node
-    replicates each input row once per set map-side, so the whole
-    lattice costs a single scan and a single partial-aggregating
-    shuffle; ``rollup``/``cube`` (``revenue_rollup``,
-    ``event_type_hour_cube``) are the closed lattices, this is the
-    hand-picked one. ``grouping_id()`` (Spark) ≡ ``GROUPING(...)`` bit
-    concatenation (DuckDB) distinguishes a real NULL group key from a
-    superaggregate NULL; revenue rounds 2dp in-query (sums of 2dp
-    decimals-as-doubles — interior rounding keeps both engines on the
-    shortest-repr path).
+    (priority), grand total. Unlike stacked UNION ALL aggregates (one
+    scan + shuffle per set), Catalyst's Expand node replicates each input
+    row once per set map-side, so the three keyed sets cost a single
+    scan and a single partial-aggregating shuffle; ``rollup``/``cube``
+    (``revenue_rollup``, ``event_type_hour_cube``) are the closed
+    lattices, this is the hand-picked one. The grand total is a global
+    aggregate (gid 3, NULL keys) under UNION ALL: Spark's grouping-set
+    aggregate is keyed by the grouping id and emits no row over empty
+    input, where SQL (and the oracle) give the grand total its row.
+    ``grouping_id()`` (Spark) ≡ ``GROUPING(...)`` bit concatenation
+    (DuckDB) distinguishes a real NULL group key from a superaggregate
+    NULL; revenue rounds 2dp in-query (sums of 2dp decimals-as-doubles —
+    interior rounding keeps both engines on the shortest-repr path).
     """
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
@@ -241,17 +243,23 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "region").createOrReplaceTempView("region")
     return spark.sql(
         """
+        WITH j AS (
+          SELECT r_name, o_orderpriority, o_totalprice
+          FROM orders
+          JOIN customer ON c_custkey = o_custkey
+          JOIN nation ON n_nationkey = c_nationkey
+          JOIN region ON r_regionkey = n_regionkey
+        )
         SELECT r_name AS region, o_orderpriority AS priority,
           grouping_id(r_name, o_orderpriority) AS gid,
           CAST(count(*) AS BIGINT) AS n_orders,
           round(sum(o_totalprice), 2) AS revenue
-        FROM orders
-        JOIN customer ON c_custkey = o_custkey
-        JOIN nation ON n_nationkey = c_nationkey
-        JOIN region ON r_regionkey = n_regionkey
-        GROUP BY GROUPING SETS (
-          (r_name, o_orderpriority), (r_name), (o_orderpriority), ()
-        )
+        FROM j
+        GROUP BY GROUPING SETS ((r_name, o_orderpriority), (r_name), (o_orderpriority))
+        UNION ALL
+        SELECT NULL, NULL, CAST(3 AS BIGINT), CAST(count(*) AS BIGINT),
+          round(sum(o_totalprice), 2)
+        FROM j
         ORDER BY gid, region, priority
         """
     )

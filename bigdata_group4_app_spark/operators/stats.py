@@ -3671,19 +3671,19 @@ def welch_ttest_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(cents).alias("s1"),
         F.sum(cents * cents).alias("s2"),
     )
-    w = Window.partitionBy()
-    both = per.select(
-        "churn",
-        "n",
-        "s1",
-        "s2",
-        F.sum(F.when(F.col("churn") == 1, F.col("n"))).over(w).alias("n1"),
-        F.sum(F.when(F.col("churn") == 1, F.col("s1"))).over(w).alias("a1"),
-        F.sum(F.when(F.col("churn") == 1, F.col("s2"))).over(w).alias("a2"),
-        F.sum(F.when(F.col("churn") == 0, F.col("n"))).over(w).alias("n0"),
-        F.sum(F.when(F.col("churn") == 0, F.col("s1"))).over(w).alias("b1"),
-        F.sum(F.when(F.col("churn") == 0, F.col("s2"))).over(w).alias("b2"),
-    ).filter(F.col("churn") == 1)
+    # one row per input, as the oracle's both_g: a global aggregate keeps
+    # it (NULL statistics) when a group, or the whole input, is empty
+    def of(churn, col):
+        return F.max(F.when(F.col("churn") == churn, F.col(col)))
+
+    both = per.agg(
+        of(1, "n").alias("n1"),
+        of(1, "s1").alias("a1"),
+        of(1, "s2").alias("a2"),
+        of(0, "n").alias("n0"),
+        of(0, "s1").alias("b1"),
+        of(0, "s2").alias("b2"),
+    )
     d1 = F.col("n1").cast("double")
     d0 = F.col("n0").cast("double")
     m1 = F.col("a1") / d1 / 100.0

@@ -14,7 +14,10 @@ attributes each job of a run to its query and step: jobs by step,
 stages (and stages per job, in submission order: an iterative round's
 exchanges), tasks, task run/CPU/GC/deserialize time, and input, shuffle
 and spill bytes. ``rounds`` counts the run's ``checkpoint_with_metrics``
-calls.
+calls, and ``compiles`` its whole-stage-codegen compiles by step (exact:
+the count of Spark's ``CodegenMetrics`` compile-time histogram). A
+compile is a miss of the generated-class cache, so a timed pass that
+compiles nothing ran only plan shapes the warm-up had compiled.
 
 The warm-up also writes the query's formatted physical plan to
 ``OUT/plans/<name>.txt`` and one row of plan-shape counters to
@@ -56,7 +59,7 @@ import metrics as M  # noqa: E402  (perfbench/metrics.py)
 from run import Tracer  # noqa: E402  (perfbench/run.py)
 
 from bigdata_group4_app_spark.registry import QUERY_REGISTRY  # noqa: E402
-from bigdata_group4_app_spark.session import get_spark  # noqa: E402
+from bigdata_group4_app_spark.session import codegen_compiles, get_spark  # noqa: E402
 from drive_contract import SF  # noqa: E402  (the oracle SF)
 
 STEPS = ("construct", "plan", "execute")
@@ -182,15 +185,16 @@ def measure(spark, names, sf_dir: str, passes: int) -> dict[str, dict]:
 
 
 def _run(spark, name: str, sf_dir: str, plan: bool) -> dict:
-    run: dict = {}
+    run: dict = {"compiles": {}}
     rounds = _tracer.count.get("iterative.round", 0)
 
     @contextlib.contextmanager
     def step(phase):
-        t0 = time.perf_counter()
+        c0, t0 = codegen_compiles(spark), time.perf_counter()
         with _tracer.span(f"profile.{phase}", phase):
             yield
         run[f"{phase}_s"] = round(time.perf_counter() - t0, 3)
+        run["compiles"][phase] = codegen_compiles(spark) - c0
 
     with step("construct"):
         df = QUERY_REGISTRY[name](spark, sf_dir)
@@ -243,7 +247,8 @@ def _totals(results: dict[str, dict]) -> dict:
     for k in ("rounds", "stages", "tasks", "input_bytes", "shuffle_read_bytes",
               "shuffle_write_bytes", "spill_bytes"):
         t[k] = sum(p[k] for p in best)
-    t["jobs"] = {s: sum(p["jobs"][s] for p in best) for s in STEPS}
+    for k in ("jobs", "compiles"):
+        t[k] = {s: sum(p[k][s] for p in best) for s in STEPS}
     t["queries_with_construct_jobs"] = sum(p["jobs"]["construct"] > 0 for p in best)
     return t
 

@@ -74,7 +74,8 @@ def test_profile_run_attributes_jobs_to_steps(tmp_path):
          "--sf-dir", SF_SMOKE, "--out", str(tmp_path)],
         env=env, check=True, capture_output=True, timeout=300,
     )
-    q = json.loads((tmp_path / "profile.json").read_text())["queries"]
+    report = json.loads((tmp_path / "profile.json").read_text())
+    q = report["queries"]
     rows = (tmp_path / "plan_counters.tsv").read_text().splitlines()
     assert [r.split("\t")[0] for r in rows] == names
     for name in names:
@@ -90,6 +91,17 @@ def test_profile_run_attributes_jobs_to_steps(tmp_path):
         assert p["jobs"]["construct"] > 0 and p["rounds"] > 0, p
     for p in q["churn_stats"]["passes"]:
         assert p["jobs"]["construct"] == 0 and p["jobs"]["execute"] > 0, p
+    # codegen compiles by step: the warm-up (in a fresh JVM) compiles the
+    # plan's classes, and the timed passes of a plan that does not vary
+    # between runs find every one of them in the generated-class cache
+    steps = {"construct", "plan", "execute"}
+    for name in names:
+        for p in [q[name]["warm"], *q[name]["passes"]]:
+            assert set(p["compiles"]) == steps, p
+    stats = q["churn_stats"]
+    assert stats["warm"]["compiles"]["execute"] > 0, stats["warm"]
+    assert [sum(p["compiles"].values()) for p in stats["passes"]] == [0, 0], stats["passes"]
+    assert set(report["totals"]["compiles"]) == steps
 
 
 def test_bench_runs_each_query_under_its_job_group(spark, monkeypatch):
@@ -101,4 +113,5 @@ def test_bench_runs_each_query_under_its_job_group(spark, monkeypatch):
         bench._materialize(spark, "churn_stats")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("churn_stats")
+    jobs = bench._group_jobs(spark, "churn_stats")
+    assert jobs and bench._tasks(spark, jobs) > 0
