@@ -134,7 +134,8 @@ def _try_put_manifest(
         "tables": tables,
         "stats": stats or {},
         "schemas": schemas or {},
-        # MOR delete files (round 13): {table: [{"path", "col", "n"}]}
+        # MOR delete files (round 13): {table: [{"path", "col", "n"}]},
+        # each with its "ddl" when the writer committed one
         # — reader-side anti-join entries; compaction retires them
         "deletes": deletes or {},
     }
@@ -319,7 +320,7 @@ def commit_snapshot_rebase(
     head id is returned without an empty commit.
 
     ``delete_appends`` (round 13) adds MOR delete-file entries
-    (``{table: [{"path", "col", "n"}]}``) — append-shaped, so they
+    (``{table: [{"path", "col", "n", "ddl"}]}``) — append-shaped, so they
     commute like segment appends (entries already present by path are
     skipped). A ``replaces`` entry for a table RETIRES that table's
     delete files along with its old stats: the replacement was read
@@ -423,8 +424,12 @@ def read_snapshot_table(
     ZERO extra footer I/O (no mergeSchema scan over every file: the
     manifest schema is authoritative, the Iceberg read-projection
     shape). Supported evolution: add-column; type changes need a
-    rewrite. A manifest listing an EMPTY segment list (legitimate after
-    a COW delete of every row) returns an empty frame of the committed
+    rewrite. The ingest sink commits the DDL of each table it creates
+    (:func:`~..streaming.sinks.catalog_commit_step`); a table with
+    neither a committed schema nor a caller hint falls through to
+    inference, one footer-reading Spark job per read. A manifest
+    listing an EMPTY segment list (legitimate after a COW delete of
+    every row) returns an empty frame of the committed
     schema rather than an opaque zero-path error (review r12); without
     a committed schema that case raises a descriptive error.
 
@@ -490,9 +495,16 @@ def _scan_segments(
     rows, matched against the scan's _metadata — materialized DIRECTLY
     on the file scan (joins drop it), then projected away after every
     anti-join. Rewritten rows land in new part files, so position
-    entries naming the old files become no-ops for them."""
-    reader = spark.read.schema(ddl) if ddl is not None else spark.read
-    out = reader.parquet(*[os.path.join(catalog_dir, p) for p in rels])
+    entries naming the old files become no-ops for them. An entry's
+    ``ddl`` (committed by the MOR delete writers) is read through like
+    the table's: no footer-inference job; a legacy entry without one
+    infers."""
+
+    def read(paths: list[str], schema: str | None) -> DataFrame:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*[os.path.join(catalog_dir, p) for p in paths])
+
+    out = read(rels, ddl)
     pos_entries = [e for e in entries if e.get("kind") == "position"]
     if pos_entries:
         data_cols = out.columns
@@ -505,9 +517,7 @@ def _scan_segments(
         )
     for e in entries:
         if e.get("kind") == "position":
-            pos = spark.read.parquet(
-                os.path.join(catalog_dir, e["path"])
-            ).select(
+            pos = read([e["path"]], e.get("ddl")).select(
                 F.col("file_name").alias("__pf"),
                 F.col("row_index").alias("__pi"),
             )
@@ -518,9 +528,9 @@ def _scan_segments(
                 "left_anti",
             )
         else:
-            keys = spark.read.parquet(
-                os.path.join(catalog_dir, e["path"])
-            ).select(F.col(e["col"]).alias("__del_key"))
+            keys = read([e["path"]], e.get("ddl")).select(
+                F.col(e["col"]).alias("__del_key")
+            )
             out = out.join(
                 F.broadcast(keys),
                 out[e["col"]] == keys["__del_key"],
@@ -829,10 +839,11 @@ def mor_delete_keys(
         return head_id  # nothing to delete: no empty delete file
     rel = write_segment(kdf, catalog_dir, table, seg_name)
     kdf.unpersist()
+    entry = {"path": rel, "col": col, "n": n, "ddl": kdf.schema.toDDL()}
     return commit_snapshot_rebase(
         catalog_dir,
         base_head=head_id,
-        delete_appends={table: [{"path": rel, "col": col, "n": n}]},
+        delete_appends={table: [entry]},
         committed_at=committed_at,
     )
 
@@ -873,12 +884,13 @@ def mor_delete_positions(
     rel = write_segment(pdf, catalog_dir, table, seg_name)
     pdf.unpersist()
     ids = committed_snapshot_ids(catalog_dir)
+    entry = {
+        "path": rel, "kind": "position", "n": n, "ddl": pdf.schema.toDDL()
+    }
     return commit_snapshot_rebase(
         catalog_dir,
         base_head=ids[-1] if ids else None,
-        delete_appends={
-            table: [{"path": rel, "kind": "position", "n": n}]
-        },
+        delete_appends={table: [entry]},
         committed_at=committed_at,
     )
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
@@ -590,6 +591,13 @@ def catalog_commit_step(batch_df: DataFrame, catalog_dir: str) -> int | None:
     now part of the seen set, so overlapping ids are dropped, keeping
     exactly-once), re-derive stats, retry. Bounded, then re-raises.
 
+    SCHEMAS: the commit that creates ``documents`` and ``doc_stats``
+    also commits their DDL (the schema of the segments it wrote), so
+    :func:`read_snapshot_table` and :func:`compact_table` project
+    through it instead of running a footer-inference job per read. A
+    table already in the head keeps its schema: the sink never narrows
+    an evolved schema, and a legacy table without one keeps inferring.
+
     Returns the committed snapshot id, or None for a no-op replay."""
     from ..operators.snapshots import (
         _retry_on_conflict,
@@ -604,7 +612,7 @@ def catalog_commit_step(batch_df: DataFrame, catalog_dir: str) -> int | None:
         delta = _batch_delta(batch_df, catalog_dir, head)
         if delta is None:
             return None  # empty batch / pure replay: no snapshot
-        rel, stats_rel, bounds = delta
+        rel, stats_rel, bounds, schemas = delta
         # REBASING commit: the documents append commutes with any
         # interleaved maintenance commit (the rebase re-applies it onto
         # the winner's list); the doc_stats replace commutes iff the
@@ -612,12 +620,16 @@ def catalog_commit_step(batch_df: DataFrame, catalog_dir: str) -> int | None:
         # reaches the retry loop. Head schemas/stats carry forward
         # inside the rebase (ADVICE r12), so a sink commit can never
         # erase an evolved schema or another segment's zone maps.
+        # ``schemas`` names only tables absent from ``head``; a winner
+        # that created them first also created doc_stats, so the
+        # replace conflicts and the retry drops them.
         return commit_snapshot_rebase(
             catalog_dir,
             appends={"documents": [rel]},
             replaces={"doc_stats": [stats_rel]},
             base_head=head["id"] if head else None,
             stats={"documents": {rel: bounds}},
+            schemas=schemas,
         )
 
     return _retry_on_conflict(attempt, "catalog sink")
@@ -625,16 +637,21 @@ def catalog_commit_step(batch_df: DataFrame, catalog_dir: str) -> int | None:
 
 def _batch_delta(
     batch_df: DataFrame, catalog_dir: str, head: dict | None
-) -> tuple[str, str, dict] | None:
+) -> tuple[str, str, dict, dict[str, str]] | None:
     """The segments one ingest micro-batch adds on top of ``head`` (a
     manifest, None for an empty catalog): anti-join the batch against
     the head's seen set, write the genuinely-new docs as one documents
     segment and the incremental one-row ``doc_stats`` segment. Returns
-    ``(documents rel, doc_stats rel, the new segment's zone map)``, or
-    None when nothing is new. Both ingest steps commit what this
-    returns, each through its own commit call. Every aggregate the step
-    needs (batch id bounds, the new segment's bounds and stats delta) is
-    observed by the checkpoint job that materializes its relation."""
+    ``(documents rel, doc_stats rel, the new segment's zone map,
+    schemas)``, or None when nothing is new. ``schemas`` holds the DDL
+    of the segments written, for the tables absent from the head: a
+    commit that creates a table also commits its schema, so no read of
+    it infers one from segment footers, and a table the head already
+    has keeps its committed (possibly evolved) schema or its lack of
+    one. Both ingest steps commit what this returns, each through its
+    own commit call. Every aggregate the step needs (batch id bounds,
+    the new segment's bounds and stats delta) is observed by the
+    checkpoint job that materializes its relation."""
     from ..operators.snapshots import (
         prune_segments_by_range,
         read_snapshot_table,
@@ -692,18 +709,23 @@ def _batch_delta(
             spark, catalog_dir, "doc_stats", head["id"], schema=_DOC_STATS_DDL
         ).collect()[0]
         prev_n, prev_c = prev["n_docs"], prev["n_chars"]
-    # a JVM literal row in one partition: no Python worker runs for the
-    # write, and the segment is one file
-    stats = spark.range(1, numPartitions=1).select(
-        F.lit(prev_n + agg["n"]).cast("bigint").alias("n_docs"),
-        F.lit(prev_c + agg["c"]).cast("bigint").alias("n_chars"),
-    )
+    # the row is data, not literals, so the plan compiles the same
+    # generated classes in every commit. With Arrow on (get_spark) the
+    # pandas frame is a LocalRelation and no Python worker runs for the
+    # write; a session without Arrow spreads local rows over its default
+    # parallelism, so coalesce(1) keeps the segment one file either way
+    row = {"n_docs": [prev_n + agg["n"]], "n_chars": [prev_c + agg["c"]]}
+    stats = spark.createDataFrame(pd.DataFrame(row), _DOC_STATS_DDL).coalesce(1)
     stats_rel = write_segment(
         stats, catalog_dir, "doc_stats", f"stats-{first}"
     )
+    ddls = {"documents": new.schema.toDDL(), "doc_stats": _DOC_STATS_DDL}
+    have = head["tables"] if head is not None else {}
+    schemas = {t: ddl for t, ddl in ddls.items() if t not in have}
     # zone map for the dedup prune: this segment's measured (min, max)
     # from the same batch aggregate
-    return rel, stats_rel, {"doc_id_min": first, "doc_id_max": agg["mx"]}
+    zone_map = {"doc_id_min": first, "doc_id_max": agg["mx"]}
+    return rel, stats_rel, zone_map, schemas
 
 
 class StagingAuditFailure(Exception):
@@ -742,9 +764,10 @@ def catalog_commit_step_staged(
         delta = _batch_delta(batch_df, catalog_dir, head)
         if delta is None:
             return None  # empty batch / pure replay
-        rel, stats_rel, bounds = delta
+        rel, stats_rel, bounds, schemas = delta
         # commit_to_branch takes FULL lists/stats (no rebase merge), so
-        # the head's lists, stats and deletes are carried forward here
+        # the head's lists, stats, schemas and deletes are carried
+        # forward here; ``schemas`` adds only tables the head lacks
         tables = {t: list(v) for t, v in head["tables"].items()}
         tables["documents"] = tables.get("documents", []) + [rel]
         tables["doc_stats"] = [stats_rel]
@@ -758,7 +781,7 @@ def catalog_commit_step_staged(
             branch,
             tables,
             stats=stats,
-            schemas=head.get("schemas", {}),
+            schemas={**schemas, **head.get("schemas", {})},
             deletes=dict(head.get("deletes", {})),
             expected_sid=head["id"],
         )

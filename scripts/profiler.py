@@ -18,6 +18,11 @@ calls, and ``compiles`` its whole-stage-codegen compiles by step (exact:
 the count of Spark's ``CodegenMetrics`` compile-time histogram). A
 compile is a miss of the generated-class cache, so a timed pass that
 compiles nothing ran only plan shapes the warm-up had compiled.
+``py4j_calls`` and ``py4j_s`` count the run's Py4J round trips by step
+and the seconds with one in flight: every DataFrame method, Column
+expression and conf read the driver makes is one or more round trips to
+the JVM, so this is the driver-side share of construct time. The gateway
+client's ``send_command`` is wrapped in this process only.
 
 The warm-up also writes the query's formatted physical plan to
 ``OUT/plans/<name>.txt`` and one row of plan-shape counters to
@@ -49,6 +54,7 @@ import re
 import shutil
 import sys
 import tempfile
+import threading
 import time
 from pathlib import Path
 
@@ -136,8 +142,45 @@ def profiled_spark(app_name: str):
         shutil.rmtree(log_dir, ignore_errors=True)
 
 
-# one per process: wrap_engine rebinds engine functions process-wide
+class Py4JCounter:
+    """Py4J round trips through a session's gateway client, and the
+    seconds with at least one of them in flight, counted from
+    construction on. A call can start inside another (py4j releases a
+    collected JavaObject with a call of its own, from whatever
+    allocation triggers the collection), so overlapping calls add their
+    union, never more than the wall around them."""
+
+    def __init__(self, spark):
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        lock = threading.RLock()  # re-entered by a call nested in another
+        self.calls, self.seconds = 0, 0.0
+        self._open, self._since = 0, 0.0
+
+        def counted(*args, **kwargs):
+            with lock:
+                self.calls += 1
+                self._open += 1
+                if self._open == 1:
+                    self._since = time.perf_counter()
+            try:
+                return send(*args, **kwargs)
+            finally:
+                with lock:
+                    self._open -= 1
+                    if self._open == 0:
+                        self.seconds += time.perf_counter() - self._since
+
+        client.send_command = counted
+
+    def read(self) -> tuple[int, float]:
+        return self.calls, self.seconds
+
+
+# one per process: wrap_engine rebinds engine functions process-wide, and
+# the counter wraps the one gateway client
 _tracer: Tracer | None = None
+_py4j: Py4JCounter | None = None
 _calls = itertools.count()  # tags each measure() call's jobs apart
 
 
@@ -148,13 +191,14 @@ def measure(spark, names, sf_dir: str, passes: int) -> dict[str, dict]:
     "plan": text}}``, where ``min_s`` is the fastest timed pass's wall, or
     ``{name: {"error": ...}}`` for a query that raised. The session must
     come from ``profiled_spark``."""
-    global _tracer
+    global _tracer, _py4j
     unknown = [n for n in names if n not in QUERY_REGISTRY]
     if unknown:
         raise KeyError(f"unknown queries: {unknown}")
     if _tracer is None:
         _tracer = Tracer(spark.sparkContext)
         _tracer.wrap_engine()
+        _py4j = Py4JCounter(spark)
     call = next(_calls)
     out: dict[str, dict] = {}
     _tracer.enabled = True
@@ -185,16 +229,20 @@ def measure(spark, names, sf_dir: str, passes: int) -> dict[str, dict]:
 
 
 def _run(spark, name: str, sf_dir: str, plan: bool) -> dict:
-    run: dict = {"compiles": {}}
+    run: dict = {"compiles": {}, "py4j_calls": {}, "py4j_s": {}}
     rounds = _tracer.count.get("iterative.round", 0)
 
     @contextlib.contextmanager
     def step(phase):
         c0, t0 = codegen_compiles(spark), time.perf_counter()
         with _tracer.span(f"profile.{phase}", phase):
+            n0, s0 = _py4j.read()
             yield
+            n1, s1 = _py4j.read()
         run[f"{phase}_s"] = round(time.perf_counter() - t0, 3)
         run["compiles"][phase] = codegen_compiles(spark) - c0
+        run["py4j_calls"][phase] = n1 - n0
+        run["py4j_s"][phase] = round(s1 - s0, 3)
 
     with step("construct"):
         df = QUERY_REGISTRY[name](spark, sf_dir)
@@ -247,8 +295,9 @@ def _totals(results: dict[str, dict]) -> dict:
     for k in ("rounds", "stages", "tasks", "input_bytes", "shuffle_read_bytes",
               "shuffle_write_bytes", "spill_bytes"):
         t[k] = sum(p[k] for p in best)
-    for k in ("jobs", "compiles"):
+    for k in ("jobs", "compiles", "py4j_calls"):
         t[k] = {s: sum(p[k][s] for p in best) for s in STEPS}
+    t["py4j_s"] = {s: round(sum(p["py4j_s"][s] for p in best), 3) for s in STEPS}
     t["queries_with_construct_jobs"] = sum(p["jobs"]["construct"] > 0 for p in best)
     return t
 

@@ -1,8 +1,8 @@
 """``scripts/profiler.py``, the per-query measurement loop: its plan-shape
 counters on a fixed plan, and one end-to-end run at sf0.001 that pins
-the protocol (warm-up, then cache-cleared passes) and the event-log
-attribution of jobs to query steps. Also ``bench.py``'s attribution of
-every job to its query's job group."""
+the protocol (warm-up, then cache-cleared passes), the event-log
+attribution of jobs to query steps and the Py4J round trips by step.
+Also ``bench.py``'s attribution of every job to its query's job group."""
 
 from __future__ import annotations
 
@@ -102,6 +102,19 @@ def test_profile_run_attributes_jobs_to_steps(tmp_path):
     assert stats["warm"]["compiles"]["execute"] > 0, stats["warm"]
     assert [sum(p["compiles"].values()) for p in stats["passes"]] == [0, 0], stats["passes"]
     assert set(report["totals"]["compiles"]) == steps
+    # Py4J round trips by step: building a DataFrame and running it both
+    # call into the JVM, and the seconds inside the calls are part of the
+    # step's wall
+    for name in names:
+        for p in [q[name]["warm"], *q[name]["passes"]]:
+            assert set(p["py4j_calls"]) == set(p["py4j_s"]) == steps, p
+            for s in steps:
+                assert 0 <= p["py4j_s"][s] <= p[f"{s}_s"] + 0.001, (s, p)
+    for p in stats["passes"]:
+        assert p["py4j_calls"]["construct"] > 0, p
+        assert p["py4j_calls"]["execute"] > 0, p
+    assert set(report["totals"]["py4j_calls"]) == steps
+    assert set(report["totals"]["py4j_s"]) == steps
 
 
 def test_bench_runs_each_query_under_its_job_group(spark, monkeypatch):

@@ -242,7 +242,12 @@ class TestMorDelete:
         # was rewritten; the only new artifact is the delete file
         assert m["tables"]["t"] == before["tables"]["t"]
         assert m["deletes"]["t"] == [
-            {"path": "segments/t/dk0", "col": "vec_id", "n": 3}  # dedup'd
+            {  # dedup'd, and read back through its committed schema
+                "path": "segments/t/dk0",
+                "col": "vec_id",
+                "n": 3,
+                "ddl": "vec_id BIGINT",
+            }
         ]
         got = sorted(
             r["vec_id"]

@@ -770,3 +770,121 @@ def test_ingest_sink_steps_job_budget(spark, tmp_path):
             name,
             seen[name],
         )
+
+
+def test_catalog_commit_step_commits_created_table_schemas(spark, tmp_path):
+    """The commit that creates ``documents`` and ``doc_stats`` commits their
+    DDL, so the snapshot read and the compaction project through it and run
+    no footer-inference job; the one-row stats segment is data, so a repeat
+    commit compiles no generated class."""
+    from bigdata_group4_app_spark.operators.snapshots import (
+        committed_snapshot_ids,
+        compact_table,
+        read_manifest,
+        read_snapshot_table,
+    )
+    from bigdata_group4_app_spark.session import codegen_compiles
+    from bigdata_group4_app_spark.streaming.sinks import (
+        _DOC_STATS_DDL,
+        catalog_commit_step,
+    )
+
+    from .conftest import jobs_during
+
+    docs = (
+        load_table(spark, SF_SMOKE, "documents")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .toPandas()
+    )
+    size = len(docs) // 4
+    batches = [
+        spark.createDataFrame(
+            docs[i * size : (i + 1) * size], "doc_id long, text string"
+        )
+        for i in range(4)
+    ]
+    catalog = str(tmp_path / "catalog")
+    for b in batches[:2]:
+        catalog_commit_step(b, catalog)
+    head = read_manifest(catalog, committed_snapshot_ids(catalog)[-1])
+    assert head["schemas"] == {
+        "documents": "doc_id BIGINT,text STRING",
+        "doc_stats": _DOC_STATS_DDL,
+    }
+    for table in ("documents", "doc_stats"):
+        _, jobs = jobs_during(
+            spark,
+            lambda: read_snapshot_table(spark, catalog, table),
+            f"schema-read-{table}",
+        )
+        assert jobs == [], (table, jobs)
+    _, jobs = jobs_during(
+        spark,
+        lambda: compact_table(spark, catalog, "documents", "compact-0"),
+        "schema-compact",
+    )
+    assert len(jobs) == 1, jobs
+    counts = []
+    for b in batches[2:]:
+        c0 = codegen_compiles(spark)
+        catalog_commit_step(b, catalog)
+        counts.append(codegen_compiles(spark) - c0)
+    assert counts[-1] == 0, counts
+
+
+def test_staged_commit_carries_created_table_schemas(spark, tmp_path):
+    """The staged writer commits the same DDLs as the main-line writer. It
+    needs a main head that already has both tables, so it carries the DDLs
+    the bootstrapping commit created."""
+    from bigdata_group4_app_spark.operators.snapshots import (
+        read_manifest,
+        resolve_ref,
+    )
+    from bigdata_group4_app_spark.streaming.sinks import (
+        catalog_commit_step,
+        catalog_commit_step_staged,
+    )
+
+    catalog = str(tmp_path / "catalog")
+    catalog_commit_step(
+        spark.createDataFrame([(1, "one")], "doc_id long, text string"),
+        catalog,
+    )
+    main = read_manifest(catalog, resolve_ref(catalog, "main"))
+    sid = catalog_commit_step_staged(
+        spark.createDataFrame([(2, "two")], "doc_id long, text string"),
+        catalog,
+    )
+    staged = read_manifest(catalog, sid)
+    assert set(staged["schemas"]) == {"documents", "doc_stats"}
+    assert staged["schemas"] == main["schemas"]
+
+
+def test_stats_segment_is_one_file_without_arrow(spark, tmp_path):
+    """A session without Arrow spreads local rows over its default
+    parallelism; the one-row ``doc_stats`` segment is still one file."""
+    import glob
+    import os
+
+    from bigdata_group4_app_spark.operators.snapshots import (
+        committed_snapshot_ids,
+        read_manifest,
+    )
+    from bigdata_group4_app_spark.streaming.sinks import catalog_commit_step
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    catalog = str(tmp_path / "catalog")
+    try:
+        catalog_commit_step(
+            spark.createDataFrame([(1, "one")], "doc_id long, text string"),
+            catalog,
+        )
+    finally:
+        spark.conf.set(key, was)
+    head = read_manifest(catalog, committed_snapshot_ids(catalog)[-1])
+    (rel,) = head["tables"]["doc_stats"]
+    files = glob.glob(os.path.join(catalog, rel, "*.parquet"))
+    assert len(files) == 1, files
